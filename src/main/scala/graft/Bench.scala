@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 
 /** Headline benchmark: q1..q22 on SPARK_GRAFT_SF_DIR, one JSON line out.
@@ -12,79 +11,20 @@ import org.apache.spark.sql.catalyst.InternalRow
   * plan (cloned per sample so every stage genuinely re-runs; consumed by
   * a drain-all job, the same full materialization the noop sink performs,
   * no driver-side collect).
-  * Round-9 attribution (BenchProbe under interleaving) showed the
+  * Round-9 attribution (a plan/exec probe under interleaving) showed the
   * iteration-major protocol's ~2× rise vs query-major was per-sample
   * driver re-planning, not executor work — prepared-plan reuse removes
   * it without giving up iteration-major sampling. A full untimed warmup
   * pass first absorbs JIT and file-listing costs, as the reference's
-  * release-build numbers do.
+  * release-build numbers do. The session is [[Harness.acceptance]].
   */
 object Bench {
-  /** 1/5/15-minute system load average as a JSON array ("[0.39,0.14,0.30]").
-    * Recorded before and after the timed region so a reader can
-    * mechanically distinguish ambient-load drift from plan regressions
-    * (this box's background load roams; judged rounds have had to
-    * adjudicate ±5% total drift from prose). */
-  def loadAvg(): String = {
-    try {
-      val parts = scala.io.Source.fromFile("/proc/loadavg").mkString
-        .trim.split("\\s+").take(3)
-      parts.mkString("[", ",", "]")
-    } catch { case scala.util.control.NonFatal(_) => "[]" }
-  }
-
   def main(args: Array[String]): Unit = {
-    val loadBefore = loadAvg()
+    val loadBefore = Harness.loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Env knobs parse loudly: a malformed value falls back to the default
-    // with a stderr line naming the variable, instead of crashing the
-    // whole run before any timing is emitted (r18 ADVICE item 3).
-    def envInt(name: String, default: Int): Int =
-      sys.env.get(name).map { v =>
-        try v.trim.toInt catch { case _: NumberFormatException =>
-          System.err.println(s"[bench] $name='$v' is not an int; using $default")
-          default }
-      }.getOrElse(default)
-    def envDouble(name: String, default: Double): Double =
-      sys.env.get(name).map { v =>
-        try v.trim.toDouble catch { case _: NumberFormatException =>
-          System.err.println(s"[bench] $name='$v' is not a number; using $default")
-          default }
-      }.getOrElse(default)
-    // Scaling-honest defaults (r19 verdict item 2): when the env doesn't
-    // pin them, parts/shuffle derive from SPARK_GRAFT_CPUS so a lower-core
-    // run genuinely exposes less parallelism — the former fixed 8/4
-    // capped every query at 8 tasks regardless of core count, which made
-    // the driver's 8-vs-32-core scaling ratios read ≈1 by construction.
-    // Derivation measured this round (r20 alternating clean legs at 32
-    // cores, sf0.1): parts = cpus, shuffle = cpus/4 (floors 8/4).
-    //   8/4 (old pin)  8.95 / 8.58 s   — but caps every stage at 8 tasks
-    //   32/16          11.14 / 10.55 s — post-shuffle task launch dominates
-    //   32/4           13.07 s         — 32 map tasks feeding 4 reducers
-    //   32/8           9.21 s          — scan parallelism follows cores,
-    //                                    q1 0.23→0.19; within noise of 8/4
-    // At cpus=8 the derivation reproduces the old 8/4 exactly, so the
-    // historical 8-core artifacts stay comparable. Explicit env overrides
-    // win, as before. At real scale the same knobs are sized to cores ×
-    // executors; AQE (off here — its stage re-optimization costs more
-    // than it saves on sub-second queries) would be on for a 100 TB run.
-    val cpusN = try cpus.trim.toInt catch { case _: NumberFormatException => 32 }
-    val parts = envInt("SPARK_GRAFT_BENCH_PARTS", math.max(8, cpusN))
-    val shuffle = envInt("SPARK_GRAFT_BENCH_SHUFFLE",
-      math.max(4, cpusN / 4)).toString
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    import Harness.{envDouble, envInt}
+    val profile = Harness.acceptance()
+    val spark = Harness.session(profile)
     // Setup (mirrors the reference's table registration): cache tables
     // in-memory, repartitioned so stages parallelize past the corpus's
     // single-row-group parquet layout. Not counted in query timings, same
@@ -100,7 +40,7 @@ object Bench {
     // stays like-for-like. Artifacts from this lane stamp "uncached":true.
     val uncached = sys.env.get("SPARK_GRAFT_BENCH_UNCACHED").contains("true")
     if (uncached) Q.registerAll(spark, sfDir)
-    else Q.cacheTables(spark, sfDir, parts)
+    else Q.cacheTables(spark, sfDir, profile.parts)
 
     // SPARK_GRAFT_BENCH_ONLY="q11 q16" restricts the run for iteration
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -127,33 +67,21 @@ object Bench {
           None
         }
       }.toMap
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        if (!prepared.contains(name)) return -1.0
-        prepared(name) match {
-          case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            // AQE re-plans per execution BY DESIGN, and a cloned adaptive
-            // plan would reuse its already-materialized query stages
-            // (shuffle outputs) — timing only the final stage. Under AQE
-            // the honest sample is the full rebuild + noop write.
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-          case p =>
-            // full materialization: consume every row of every partition,
-            // equivalent to the noop sink's iterator drain
-            spark.sparkContext.runJob(p.clone().execute(),
-              (it: Iterator[InternalRow]) => {
-                var c = 0L; while (it.hasNext) { it.next(); c += 1 }; c
-              })
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        // fatal errors (executor OOM etc.) propagate and kill the run —
-        // a -1.0 row must mean a query bug, never a dying JVM
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
+    def run(name: String): Double = prepared.get(name) match {
+      case None => -1.0
+      case Some(_: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec) =>
+        // AQE re-plans per execution BY DESIGN, and a cloned adaptive
+        // plan would reuse its already-materialized query stages
+        // (shuffle outputs) — timing only the final stage. Under AQE
+        // the honest sample is the full rebuild + noop write.
+        Harness.timedNoop("bench", name)(SparkEntry.queries(name)(spark, sfDir))
+      case Some(p) =>
+        // full materialization: consume every row of every partition,
+        // equivalent to the noop sink's iterator drain
+        Harness.timed("bench", name)(spark.sparkContext.runJob(p.clone().execute(),
+          (it: Iterator[InternalRow]) => {
+            var c = 0L; while (it.hasNext) { it.next(); c += 1 }; c
+          }))
     }
     names.foreach(run); names.foreach(run) // warmup: JIT + codegen
     // ---- Interference canary (round-18, per the r17 verdict) ----
@@ -313,7 +241,7 @@ object Bench {
     val failed = results.collect { case (k, ok) if ok.isEmpty => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.collect { case (_, ok) if ok.nonEmpty => ok(ok.size / 2) }.sum
-    val load = s"""{"before":$loadBefore,"after":${loadAvg()}}"""
+    val load = s"""{"before":$loadBefore,"after":${Harness.loadAvg()}}"""
     // Post-suite canary + self-adjudication: poisoned iff the window was
     // hot at ANY gate — pre (after all retries), any interleaved
     // mid-suite group, or post. A poisoned artifact still carries full

@@ -23,6 +23,7 @@ import org.apache.spark.sql.functions._
   * median is the exact-percentile sort-based aggregate; g8's top-2 is a
   * ranked window per key (no global sort); the joins broadcast the
   * small/medium dims and shuffle only the big-big case.
+  * The session is [[Harness.h2o]].
   */
 object H2oBench {
 
@@ -106,21 +107,9 @@ object H2oBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val rep = sys.env.getOrElse("SPARK_GRAFT_H2O_REP", "100").toInt
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rep = Harness.envInt("SPARK_GRAFT_H2O_REP", 100)
+    val profile = Harness.h2o()
+    val spark = Harness.session(profile)
 
     // setup (untimed, mirrors db-benchmark loading the fact into memory).
     // MEMORY_AND_DISK, not MEMORY_ONLY: when the inflated fact outgrows
@@ -128,20 +117,15 @@ object H2oBench {
     // partitions must spill to disk, not silently re-run the crossJoin
     // derivation inside every timed query.
     val x = buildX(spark, sfDir, rep)
-      .repartition(sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTS", "32").toInt)
+      .repartition(profile.parts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rows = x.count()
 
     val qs = queries(x)
-    def run(name: String, f: () => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try f().write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[h2o] $name failed: ${e.getMessage}"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def run(name: String, f: () => DataFrame): Double =
+      Harness.timedNoop("h2o", name)(f())
     qs.foreach { case (n, f) => run(n, f) } // warmup: JIT + codegen + dims
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
+    val iters = Harness.envInt("SPARK_GRAFT_BENCH_ITERS", 5)
     val results = qs.map { case (n, f) =>
       n -> Seq.fill(iters)(run(n, f)).filter(_ >= 0).sorted
     }

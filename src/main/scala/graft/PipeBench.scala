@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Pipeline-operator benchmark: times registry queries (default: the
   * training-pipeline set) on SPARK_GRAFT_SF_DIR through the noop sink,
@@ -21,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   * stack, and without a burn-in whichever op happens to run first
   * absorbs that cost into its own cells (measured: the same op reads
   * 3–8× slower as op #1 than mid-list on an idle box). Set it empty to
-  * reproduce the pre-round-15 protocol exactly. */
+  * reproduce the pre-round-15 protocol exactly. The session is
+  * [[Harness.pipebench]]. */
 object PipeBench {
   private val DefaultOps = Seq(
     "text_decontaminate", "mix_temperature", "mm_frame_sample",
@@ -75,33 +75,13 @@ object PipeBench {
     "stat_bartlett", "stat_granger_causality", "emb_ivf_recall")
 
   def main(args: Array[String]): Unit = {
-    val loadBefore = Bench.loadAvg()
+    val loadBefore = Harness.loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.pipebench())
     val ops = if (args.nonEmpty) args.toSeq else DefaultOps
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      // NonFatal only: a fatal error (OOM, stack overflow) must crash the
-      // run rather than be recorded as a -1.0 cell (round-14 advice, the
-      // same narrowing Bench carries).
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[pipebench] $name failed: ${e.getMessage}")
-        return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val iters = sys.env.getOrElse("SPARK_GRAFT_PIPE_ITERS", "1").toInt
+    def run(name: String): Double =
+      Harness.timedNoop("pipebench", name)(SparkEntry.queries(name)(spark, sfDir))
+    val iters = Harness.envInt("SPARK_GRAFT_PIPE_ITERS", 1)
     sys.env.getOrElse("SPARK_GRAFT_PIPE_BURNIN", "corpus_stats")
       .split("\\s+").filter(_.nonEmpty).foreach(run)
     val timed = ops.map { n =>
@@ -112,7 +92,7 @@ object PipeBench {
     }
     val qs = timed.map { case (k, s) => "\"" + k + "\":" + f"$s%.2f" }
       .mkString("{", ",", "}")
-    val load = s"""{"before":$loadBefore,"after":${Bench.loadAvg()}}"""
+    val load = s"""{"before":$loadBefore,"after":${Harness.loadAvg()}}"""
     println(s"""{"metric":"pipeline","unit":"sec","queries":$qs,"load":$load,"sf":"$sfDir"}""")
     spark.stop()
   }

@@ -2882,8 +2882,8 @@ object Pipeline {
     * keyed aggregate over the event stream (monetary through the exact
     * decimal-sum lane); the corpus max timestamp attaches as a broadcast
     * single-row aggregate. Each quartile assignment runs through
-    * [[Q.distNtile]] (range shuffle + parallel per-partition rank +
-    * broadcast offsets), so even at hundreds of millions of users no
+    * [[Q.ntileByBoundaries]] (narrow range shuffle of the order columns +
+    * broadcast boundary rows), so even at hundreds of millions of users no
     * single partition ever sorts the whole dimension — while remaining
     * bit-identical to the `ntile(4)` oracle (user_id tie-break). */
   def eventRfm(s: SparkSession, d: String): DataFrame = {
@@ -2895,8 +2895,8 @@ object Pipeline {
       dsum(col("value")).as("monetary"))
     // Round 20 (r19 verdict item 6, guide §2.3–2.4): pin the per-user
     // frame ONCE, projected to exactly the output columns, and assign
-    // each quartile via [[Q.ntileByBoundaries]] — the three chained
-    // [[Q.distNtile]] calls each range-shuffled and checkpointed the
+    // each quartile via [[Q.ntileByBoundaries]] — three chained
+    // per-partition-rank ntiles each range-shuffled and checkpointed the
     // progressively wider frame (28 stages); now only narrow (key,
     // user_id) projections shuffle for the boundary passes and the
     // quartiles are map-side comparisons against 3 broadcast boundary

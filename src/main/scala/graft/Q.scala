@@ -203,60 +203,23 @@ object Q {
   private[graft] def rangeParts(df: DataFrame): Int = math.max(1,
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
 
-  /** Distributed exact ntile: SQL-identical buckets to
-    * `ntile(buckets) OVER (ORDER BY order...)` with no single-partition
-    * global sort. Topology: range repartition on the order key → per-
-    * partition rank (parallel window keyed by the physical partition id) →
-    * partition-size offsets cumsum'd on the driver (a partition-count-sized
-    * collect — the same bookkeeping `RDD.zipWithIndex` does) broadcast back.
-    * Bucket from the 0-based global position by the standard ntile split
-    * (first n%B buckets take one extra row), so the result is bit-identical
-    * to the engine builtin while every heavy stage stays parallel. The
-    * order must be a total order (add a key tie-break) for reproducibility. */
-  def distNtile(df: DataFrame, buckets: Int, out: String, order: Column*): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keyed = df
-      .repartitionByRange(rangeParts(df), order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      // consumed twice (size census + rank join): pin partition contents
-      .localCheckpoint()
-    val sizes = keyed.groupBy("__pid").agg(count(lit(1)).as("pn")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val n = sizes.map(_._2).sum
-    val q = n / buckets
-    val r = n % buckets
-    val offsets = sizes.map(_._1).zip(sizes.map(_._2).scanLeft(0L)(_ + _).dropRight(1))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = broadcast(offsets.toSeq.toDF("__pid", "__off"))
-    val w = Window.partitionBy("__pid").orderBy(order: _*)
-    val bin =
-      if (q == 0L) s"__pos + 1"
-      else s"CASE WHEN __pos < ${r * (q + 1)} THEN __pos div ${q + 1} + 1 " +
-        s"ELSE (__pos - ${r * (q + 1)}) div $q + $r + 1 END"
-    keyed.join(offDf, "__pid")
-      .withColumn("__pos", col("__off") + row_number().over(w) - 1)
-      .withColumn(out, expr(bin).cast("long"))
-      .drop("__pid", "__off", "__pos")
-  }
-
   /** Distributed exact ntile via broadcast boundary rows — SQL-identical
-    * buckets to [[distNtile]] (and hence to `ntile(buckets) OVER (ORDER
-    * BY order...)`), but the frame being bucketed NEVER shuffles: only a
-    * narrow projection of the order columns goes through the range
-    * shuffle, the buckets-1 exact boundary rows (the last order tuple of
-    * each bucket) are collected, and the assignment is a map-side
-    * lexicographic comparison against those broadcast literals.
+    * buckets to `ntile(buckets) OVER (ORDER BY order...)` with no
+    * single-partition global sort, and the frame being bucketed NEVER
+    * shuffles: only a narrow projection of the order columns goes
+    * through the range shuffle, the buckets-1 exact boundary rows (the
+    * last order tuple of each bucket) are collected, and the assignment
+    * is a map-side lexicographic comparison against those broadcast
+    * literals.
     *
     * Motivation (r19 verdict item 6 / guide §2.3–2.4): event_rfm chained
-    * three [[distNtile]] calls, each range-shuffling and checkpointing
-    * the progressively wider user frame. With boundaries, the three
-    * quartile columns are plain projections over one pinned frame —
-    * per ntile the shuffle carries only the order columns and nothing
-    * joins back.
+    * three ntiles that each range-shuffled and checkpointed the
+    * progressively wider user frame and joined per-partition offsets
+    * back. With boundaries, the three quartile columns are plain
+    * projections over one pinned frame — per ntile the shuffle carries
+    * only the order columns and nothing joins back.
     *
-    * Requirements (same as [[distNtile]]): the order must be a TOTAL
+    * Requirements (same as [[distPos]]): the order must be a TOTAL
     * order (tie-break key), so "row sorts strictly after boundary k" is
     * exactly "global position > boundary position". Null order values
     * are handled with Spark's default null placement (asc = nulls first,
@@ -293,9 +256,9 @@ object Q {
     val n = sizes.sum
     val q = n / buckets
     val r = n % buckets
-    // last 0-based global position of bucket k (k = 1..buckets-1); the
-    // same split [[distNtile]]'s bin expression encodes (first n%B
-    // buckets take q+1 rows). q == 0 → each row its own bucket.
+    // last 0-based global position of bucket k (k = 1..buckets-1) under
+    // the standard ntile split (first n%B buckets take q+1 rows).
+    // q == 0 → each row its own bucket.
     val boundPos: Seq[Long] = (1 until buckets).map { k =>
       if (q == 0L) k - 1L
       else if (k <= r) k.toLong * (q + 1) - 1

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes an SF1-equivalent corpus by key-shifted replication of the
@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * cardinalities scale linearly and no artificial hot keys appear.
   * Fixed-cardinality dims (nation, region) are not replicated, as in real
   * TPC-H scaling. Non-TPC-H tables are copied once (the bench does not
-  * read them). Usage:
+  * read them). The session is [[Harness.verify]]; the written layout is
+  * set by explicit repartitions, not by its shuffle width. Usage:
   *   runMain graft.ScaleBench [factor] [srcDir] [outDir]
   * then run graft.Bench with SPARK_GRAFT_SF_DIR=outDir.
   */
@@ -24,14 +25,7 @@ object ScaleBench {
     val out = args.lift(2).getOrElse("/root/repo/target/sfscale")
     val OFF = 100000000L
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.verify())
 
     /** Union `factor` key-shifted copies. */
     def replicate(df: DataFrame, keyCols: Seq[String]): DataFrame =

@@ -1,34 +1,28 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-timeline diagnostic for registry operators: runs each named
-  * query once after a warmup pass with a listener recording every
+  * query once after a warmup run with a listener recording every
   * completed stage's wall time, task count, input/shuffle volumes, and
   * callsite — the evidence row behind a "this op's floor is
   * checkpoint/sort/IO, not reducible compute" adjudication
-  * (BENCH_REGISTRY.md). Same session config as [[Bench]].
+  * (BENCH_REGISTRY.md). The per-op header splits the wall time into
+  * `plan` (build + analysis through physical planning, driver-side) and
+  * `exec` (the noop write: job submission through the last row). The
+  * session is [[Bench]]'s, [[Harness.acceptance]].
+  * Usage: runMain graft.StageProbe name...
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTS", "8").toInt
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Q.cacheTables(spark, sfDir, parts)
+    val profile = Harness.acceptance()
+    val spark = Harness.session(profile)
+    val sc = spark.sparkContext
+    Q.cacheTables(spark, sfDir, profile.parts)
 
-    final case class Row(id: Int, ms: Long, submitMs: Long, tasks: Int,
+    final case class Row(id: Int, ms: Long, tasks: Int,
         inputMb: Double, shufReadMb: Double, shufWriteMb: Double, name: String)
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
     val listener = new SparkListener {
@@ -38,7 +32,7 @@ object StageProbe {
           a <- si.completionTime; b <- si.submissionTime
         } yield a - b).getOrElse(-1L)
         val m = si.taskMetrics
-        rows.add(Row(si.stageId, ms, si.submissionTime.getOrElse(0L), si.numTasks,
+        rows.add(Row(si.stageId, ms, si.numTasks,
           m.inputMetrics.bytesRead / 1e6,
           (m.shuffleReadMetrics.localBytesRead +
             m.shuffleReadMetrics.remoteBytesRead) / 1e6,
@@ -46,34 +40,30 @@ object StageProbe {
           si.name.takeWhile(_ != '\n').take(90)))
       }
     }
-    args.foreach { n =>
-      val run = () => SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      run() // warmup: JIT, codegen, file listing
+    def probe(n: String): Unit = {
       rows.clear()
-      spark.sparkContext.addSparkListener(listener)
-      // watermark: warmup stage-completed events still queued in the
-      // async bus at registration time WOULD be delivered to the new
-      // listener — filter them out by submission time instead of hoping
-      // the queue drained (r18 ADVICE item 4)
-      val tReg = System.currentTimeMillis()
+      ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
       val t0 = System.nanoTime()
-      run()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async; completion events for the last stage
-      // land within the bus's flush interval — a short settle is enough
-      // for a diagnostic (no public flush API on SparkContext). If the
-      // bus is slower than this, the header's stage-ms-sum vs wall gap
-      // flags the loss — treat a large gap as "re-run the probe".
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      df.queryExecution.executedPlan
+      val planMs = (System.nanoTime() - t0) / 1e6
+      val execS = Harness.timedNoop("stageprobe", n)(df)
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
       import scala.jdk.CollectionConverters._
       val rs = rows.asScala.toSeq.sortBy(_.id)
-        .filter(_.submitMs >= tReg)
-      println(f"==== $n wall=$wall%.3f s stages=${rs.size} stage-ms-sum=${rs.map(_.ms).sum} (async bus: rows are best-effort; a stage-ms-sum far below wall means missed events) ====")
+      val exec = if (execS < 0) "failed" else f"${execS * 1e3}%.1f ms"
+      println(f"==== $n plan=$planMs%.1f ms exec=$exec stages=${rs.size} stage-ms-sum=${rs.map(_.ms).sum} ====")
       rs.foreach { r =>
         println(f"[stage] ${r.id}%4d ${r.ms}%6d ms tasks=${r.tasks}%3d in=${r.inputMb}%8.1fMB sr=${r.shufReadMb}%8.1fMB sw=${r.shufWriteMb}%8.1fMB  ${r.name}")
       }
+    }
+    args.foreach { n =>
+      // warmup: JIT, codegen, file listing
+      if (Harness.timedNoop("stageprobe", n)(SparkEntry.queries(n)(spark, sfDir)) < 0)
+        println(s"==== $n failed ====")
+      else probe(n)
     }
     spark.stop()
   }

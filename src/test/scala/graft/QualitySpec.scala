@@ -149,7 +149,7 @@ class QualitySpec extends AnyFunSuite {
     }
   }
 
-  test("distNtile/distPos follow spark.sql.shuffle.partitions and stay exact") {
+  test("rangeParts/distPos follow spark.sql.shuffle.partitions and stay exact") {
     // the exact-rank primitive must derive its range-partition width from
     // the session's parallelism (not a literal) and emit identical results
     // at any setting — verified here at a non-default width
@@ -160,13 +160,6 @@ class QualitySpec extends AnyFunSuite {
       conf.set("spark.sql.shuffle.partitions", "5")
       val src = Q.t(spark, sf, "orders").select(col("o_orderkey"), col("o_totalprice"))
       assert(Q.rangeParts(src) == 5, "width must follow the session conf")
-      val dist = Q.distNtile(src, 7, "b", col("o_totalprice"), col("o_orderkey"))
-        .collect().map(r => r.getAs[Long]("o_orderkey") -> r.getAs[Long]("b")).toMap
-      val twin = src.withColumn("b",
-          ntile(7).over(Window.orderBy(col("o_totalprice"), col("o_orderkey")))
-            .cast("long"))
-        .collect().map(r => r.getAs[Long]("o_orderkey") -> r.getAs[Long]("b")).toMap
-      assert(dist == twin, "distNtile must match the builtin at width 5")
       val pos = Q.distPos(src, "p", col("o_totalprice"), col("o_orderkey"))
         .collect().map(r => r.getAs[Long]("o_orderkey") -> r.getAs[Long]("p")).toMap
       val posTwin = src.withColumn("p",

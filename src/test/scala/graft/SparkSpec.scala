@@ -7,17 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sequentially under sbt's default test execution). */
 object SparkSpec {
   val sf: String = "/root/testdata/sf0.001"
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(Harness.Profile(
+    cores = 8, shuffle = 8, aqe = true, broadcast = None, parts = 8))
 }
 
 /** Driver contract: entry() produces rows; every registered query runs and
