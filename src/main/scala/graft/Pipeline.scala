@@ -438,15 +438,6 @@ object Pipeline {
   private[graft] val NumHashes = graft.functions.MinHashSignature.NumHashes
   private[graft] val BandSize = graft.functions.MinHashSignature.BandSize
 
-  /** 60-bit hash lane from the first 15 hex chars of md5 — deliberately
-    * expressible in BOTH engines (Spark `conv(substr(md5,…),16,10)`,
-    * DuckDB `('0x' || substr(md5,…))::BIGINT`) so the LSH operators below
-    * get full DuckDB oracles instead of rows-only checks. */
-  private def md5Lane(sparkExpr: String): String =
-    s"cast(conv(substring(md5($sparkExpr), 1, 15), 16, 10) as bigint)"
-  private def md5LaneDuck(duckExpr: String): String =
-    s"(('0x' || substr(md5($duckExpr), 1, 15))::BIGINT)"
-
   /** The hyperplane coefficient matrix used by the embedding-LSH family
     * is a CONSTANT — it depends only on (plane, dim), not on the row —
     * so derive it ONCE driver-side (identical md5-lane arithmetic to the

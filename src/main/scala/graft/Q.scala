@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -181,21 +182,6 @@ object Q {
     l.join(r, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Per-partition row counts by partition index — ONE no-shuffle job
-    * over the internal-row iterators. Replaces the
-    * `groupBy(spark_partition_id())` census, which paid a hash Exchange
-    * of the whole frame just to count partition sizes (round 20; the
-    * r19 StageProbe rows show that exchange on every census). The input
-    * must be pinned (localCheckpoint) when the caller reads it again:
-    * range shuffles re-sample boundaries on re-evaluation. */
-  private[graft] def partitionSizes(df: DataFrame): Array[Long] =
-    org.apache.spark.sql.graftcol.NativeFrame.toInternalRdd(df)
-      .mapPartitionsWithIndex { (i, it) =>
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        Iterator((i, n))
-      }.collect().sortBy(_._1).map(_._2)
-
   /** Range-partition width for the exact-rank topology: follows the
     * session's shuffle parallelism so the same code is the plan at any
     * scale (a fixed literal would cap the sort's parallelism at 100×).
@@ -203,14 +189,61 @@ object Q {
   private[graft] def rangeParts(df: DataFrame): Int = math.max(1,
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
 
+  /** The one pinned range scan behind every distributed rank
+    * ([[distPos]], [[distPrefixSumWithTotal]], [[ntileBucketCol]]):
+    * range shuffle on the order key (width [[rangeParts]]) →
+    * sortWithinPartitions → localCheckpoint pin → ONE no-shuffle job
+    * summing `weight` per partition → ONE mapPartitions pass appending the
+    * LONG column `out` = `offset(partition) + running weight + base`
+    * straight off the pinned sorted iterators. Returns the frame and the
+    * grand total of the weights. The order must be a total order.
+    *
+    * The pin exists because the frame is read twice (census + rank) and a
+    * range shuffle re-samples its boundaries on re-evaluation. Both passes
+    * read the partition iterators through the
+    * [[org.apache.spark.sql.graftcol.NativeFrame]] bridge: grouping or
+    * windowing by `spark_partition_id()` over the checkpoint scan would
+    * re-shuffle the whole frame (the scan reports UnknownPartitioning),
+    * which the r19/r20 StageProbe rows showed on every census. */
+  private def rankScan(df: DataFrame, out: String, order: Seq[Column],
+      base: Long)(weight: InternalRow => Long): (DataFrame, Long) = {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+    import org.apache.spark.sql.graftcol.NativeFrame
+    val keyed = df
+      .repartitionByRange(rangeParts(df), order: _*)
+      .sortWithinPartitions(order: _*)
+      .localCheckpoint()
+    val rows = NativeFrame.toInternalRdd(keyed)
+    val offsets = rows.mapPartitionsWithIndex { (i, it) =>
+      var s = 0L
+      while (it.hasNext) s += weight(it.next())
+      Iterator((i, s))
+    }.collect().sortBy(_._1).map(_._2).scanLeft(0L)(_ + _)
+    val schema = StructType(keyed.schema.fields :+
+      StructField(out, LongType, nullable = false))
+    val ranked = rows.mapPartitionsWithIndex { (i, it) =>
+      var run = offsets(i) + base
+      val tail = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      // rows may be reused by the scan; the joined view is consumed
+      // row-at-a-time downstream (any buffering operator copies), the
+      // same contract every InternalRow scan has
+      it.map { r =>
+        run += weight(r); tail.update(0, run)
+        joined(r, tail): InternalRow
+      }
+    }
+    (NativeFrame.internalCreate(df.sparkSession, ranked, schema), offsets.last)
+  }
+
   /** Distributed exact ntile via broadcast boundary rows — SQL-identical
     * buckets to `ntile(buckets) OVER (ORDER BY order...)` with no
     * single-partition global sort, and the frame being bucketed NEVER
     * shuffles: only a narrow projection of the order columns goes
-    * through the range shuffle, the buckets-1 exact boundary rows (the
-    * last order tuple of each bucket) are collected, and the assignment
-    * is a map-side lexicographic comparison against those broadcast
-    * literals.
+    * through the range shuffle ([[rankScan]]), the buckets-1 exact
+    * boundary rows (the last order tuple of each bucket) are collected by
+    * position, and the assignment is a map-side lexicographic comparison
+    * against those broadcast literals.
     *
     * Motivation (r19 verdict item 6 / guide §2.3–2.4): event_rfm chained
     * three ntiles that each range-shuffled and checkpointed the
@@ -231,12 +264,14 @@ object Q {
     df.withColumn(out, ntileBucketCol(df, buckets, order: _*))
 
   /** The bucket expression behind [[ntileByBoundaries]]: runs the
-    * boundary jobs (narrow range shuffle + census + boundary picks)
-    * EAGERLY and returns the map-side assignment Column. Exposed so
-    * callers with several independent ntiles over one pinned frame can
-    * overlap the boundary jobs from driver threads (guide §2.6 —
-    * Spark's scheduler runs concurrent jobs; the assignment columns are
-    * then plain projections composed on the calling thread). */
+    * boundary jobs EAGERLY — [[rankScan]] positions the narrow projection
+    * of the order columns (its census total is the row count), then one
+    * job collects the buckets-1 boundary rows by position — and returns
+    * the map-side assignment Column. Exposed so callers with several
+    * independent ntiles over one pinned frame can overlap the boundary
+    * jobs from driver threads (guide §2.6 — Spark's scheduler runs
+    * concurrent jobs; the assignment columns are then plain projections
+    * composed on the calling thread). */
   def ntileBucketCol(df: DataFrame, buckets: Int,
       order: Column*): Column = {
     import org.apache.spark.sql.graftcol.NativeColumn
@@ -245,15 +280,9 @@ object Q {
     val oNames = parsed.indices.map(i => s"__o$i")
     val sortCols = parsed.zip(oNames).map { case ((_, asc), n) =>
       if (asc) col(n).asc else col(n).desc }
-    val keyed = df
-      .select(parsed.zip(oNames).map { case ((c, _), n) => c.as(n) }: _*)
-      .repartitionByRange(rangeParts(df), sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      // consumed twice (size census + boundary extraction): pin it
-      .localCheckpoint()
-    val sizes = partitionSizes(keyed)
-    val offsets = sizes.scanLeft(0L)(_ + _)
-    val n = sizes.sum
+    val (ranked, n) = rankScan(
+      df.select(parsed.zip(oNames).map { case ((c, _), o) => c.as(o) }: _*),
+      "__p", sortCols, base = -1L)(_ => 1L)
     val q = n / buckets
     val r = n % buckets
     // last 0-based global position of bucket k (k = 1..buckets-1) under
@@ -264,41 +293,12 @@ object Q {
       else if (k <= r) k.toLong * (q + 1) - 1
       else r * (q + 1) + (k - r).toLong * q - 1
     }.filter(p => p >= 0 && p < n)
-    // pick the boundary rows straight off the checkpoint's sorted
-    // iterators — (partition, local index) is known from the census, so
-    // this is one no-shuffle job emitting buckets-1 rows (the previous
-    // formulation ranked the frame through a Window.partitionBy(__pid),
-    // which paid a full extra Exchange — see [[distPos]])
-    val bRows: Seq[org.apache.spark.sql.Row] = if (boundPos.isEmpty) Seq.empty
-    else {
-      val byPid: Map[Int, Seq[(Long, Long)]] = boundPos.map { p =>
-        var i = 0
-        while (i + 1 < offsets.length - 1 && offsets(i + 1) <= p) i += 1
-        (i, (p, p - offsets(i)))
-      }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val picked = org.apache.spark.sql.graftcol.NativeFrame
-        .toInternalRdd(keyed).mapPartitionsWithIndex { (i, it) =>
-          byPid.get(i) match {
-            case None => Iterator.empty
-            case Some(want) =>
-              val targets = want.sortBy(_._2).iterator
-              val out = Seq.newBuilder[(Long, org.apache.spark.sql.catalyst.InternalRow)]
-              var cur = if (targets.hasNext) targets.next() else null
-              var li = -1L
-              while (cur != null && it.hasNext) {
-                val row = it.next(); li += 1
-                if (li == cur._2) {
-                  out += ((cur._1, row.copy()))
-                  cur = if (targets.hasNext) targets.next() else null
-                }
-              }
-              out.result().iterator
-          }
-        }.collect()
-      val conv = org.apache.spark.sql.graftcol.NativeFrame
-        .toScalaRow(keyed.schema)
-      picked.sortBy(_._1).map(p => conv(p._2)).toSeq
-    }
+    // boundary rows in position order; each carries its `__p` last, which
+    // sortsAfter never reads
+    val bRows: Seq[org.apache.spark.sql.Row] =
+      if (boundPos.isEmpty) Seq.empty
+      else ranked.filter(col("__p").isin(boundPos: _*)).collect()
+        .sortBy(_.getLong(parsed.size)).toSeq
     // bucket = 1 + #(boundaries this row sorts strictly after); under a
     // total order that equals 1 + #(boundary positions < row position),
     // which is exactly the ntile bucket.
@@ -324,92 +324,27 @@ object Q {
 
   /** Distributed exact global position: SQL-identical to
     * `row_number() OVER (ORDER BY order...) - 1` with no single-partition
-    * sort. Topology (round 20): range shuffle on the order key →
-    * localCheckpoint pin → single-job partition-size census
-    * ([[partitionSizes]]) → ONE mapPartitions pass appending
-    * `offset(partition) + local index` straight off the checkpoint's
-    * sorted iterators. The previous formulation ranked via
-    * `Window.partitionBy(spark_partition_id())` + a broadcast offset
-    * join — which LOOKED parallel but paid a full extra Exchange (the
-    * checkpoint scan reports UnknownPartitioning, so the window
-    * re-shuffled the whole frame by `__pid`) plus a census exchange; the
-    * r19/r20 StageProbe rows show both. The order must be a total order. */
-  def distPos(df: DataFrame, out: String, order: Column*): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.graftcol.NativeFrame
-    val spark = df.sparkSession
-    val keyed = df
-      .repartitionByRange(rangeParts(df), order: _*)
-      .sortWithinPartitions(order: _*)
-      // consumed twice (size census + position pass): pin partition
-      // contents — range shuffles re-sample boundaries on re-evaluation
-      .localCheckpoint()
-    val offsets = partitionSizes(keyed).scanLeft(0L)(_ + _)
-    val schema = StructType(keyed.schema.fields :+
-      StructField(out, LongType, nullable = false))
-    val rdd = NativeFrame.toInternalRdd(keyed).mapPartitionsWithIndex {
-      (i, it) =>
-        var pos = offsets(i) - 1
-        val tail = new GenericInternalRow(1)
-        val joined = new JoinedRow
-        // rows may be reused by the scan; the joined view is consumed
-        // row-at-a-time downstream (any buffering operator copies), the
-        // same contract every InternalRow scan has
-        it.map { r =>
-          pos += 1; tail.update(0, pos)
-          joined(r, tail): org.apache.spark.sql.catalyst.InternalRow
-        }
-    }
-    NativeFrame.internalCreate(spark, rdd, schema)
-  }
+    * sort — [[rankScan]] with weight 1 from base −1, so each row gets
+    * `offset(partition) + local index`. The order must be a total order. */
+  def distPos(df: DataFrame, out: String, order: Column*): DataFrame =
+    rankScan(df, out, order, base = -1L)(_ => 1L)._1
 
   /** Distributed exact INCLUSIVE prefix sum of a LONG weight column over
-    * a total order — `sum(w) OVER (ORDER BY order ROWS UNBOUNDED
-    * PRECEDING)` with no single-partition window and (round 20) no
-    * hidden re-shuffle: range shuffle on the order key → localCheckpoint
-    * pin → one no-shuffle job summing each partition's weights → one
-    * mapPartitions pass emitting `offset(partition) + running sum`
-    * straight off the pinned sorted iterators (the same machinery as
-    * [[distPos]]). Null weights contribute 0, matching window-sum
-    * semantics. Also returns the grand total (= the last offset), which
-    * callers previously recomputed with a separate aggregate over the
-    * pin. The order must be a total order. */
+    * a total order, with no single-partition window: [[rankScan]] with
+    * the weight as the per-row weight from base 0. Also returns the grand
+    * total of the weights.
+    *
+    * A null weight contributes 0. That equals `sum(w) OVER (ORDER BY
+    * order ROWS UNBOUNDED PRECEDING)` on every row except those whose
+    * weights so far are all null: the window sum is NULL there, while
+    * this reads 0. The order must be a total order. */
   private[graft] def distPrefixSumWithTotal(df: DataFrame, weight: String,
       out: String, order: Column*): (DataFrame, Long) = {
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.graftcol.NativeFrame
-    val spark = df.sparkSession
-    val keyed = df
-      .repartitionByRange(rangeParts(df), order: _*)
-      .sortWithinPartitions(order: _*)
-      // consumed twice (weight census + prefix pass): pin the shuffle
-      .localCheckpoint()
-    val wOrd = keyed.schema.fieldIndex(weight)
-    require(keyed.schema(wOrd).dataType == LongType,
-      s"distPrefixSum needs a LONG weight, got ${keyed.schema(wOrd).dataType}")
-    val psums = NativeFrame.toInternalRdd(keyed).mapPartitionsWithIndex {
-      (i, it) =>
-        var s = 0L
-        while (it.hasNext) {
-          val r = it.next(); if (!r.isNullAt(wOrd)) s += r.getLong(wOrd)
-        }
-        Iterator((i, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = psums.scanLeft(0L)(_ + _)
-    val schema = StructType(keyed.schema.fields :+
-      StructField(out, LongType, nullable = false))
-    val rdd = NativeFrame.toInternalRdd(keyed).mapPartitionsWithIndex {
-      (i, it) =>
-        var run = offsets(i)
-        val tail = new GenericInternalRow(1)
-        val joined = new JoinedRow
-        it.map { r =>
-          if (!r.isNullAt(wOrd)) run += r.getLong(wOrd)
-          tail.update(0, run)
-          joined(r, tail): org.apache.spark.sql.catalyst.InternalRow
-        }
-    }
-    (NativeFrame.internalCreate(spark, rdd, schema), offsets.last)
+    val wOrd = df.schema.fieldIndex(weight)
+    require(df.schema(wOrd).dataType == LongType,
+      s"distPrefixSum needs a LONG weight, got ${df.schema(wOrd).dataType}")
+    rankScan(df, out, order, base = 0L) { r =>
+      if (r.isNullAt(wOrd)) 0L else r.getLong(wOrd) }
   }
 
   /** [[distPrefixSumWithTotal]] without the total. */
@@ -422,4 +357,13 @@ object Q {
     s"CAST(sum(CAST(($e) AS DECIMAL(30,6))) AS DOUBLE)"
   def DAVG(e: String): String =
     s"CAST(sum(CAST(($e) AS DECIMAL(30,6))) AS DOUBLE) / count($e)"
+
+  /** 60-bit hash lane from the first 15 hex chars of md5 — deliberately
+    * expressible in BOTH engines (Spark `conv(substr(md5,…),16,10)`,
+    * DuckDB `('0x' || substr(md5,…))::BIGINT`), so the hash-based
+    * operators get full DuckDB oracles instead of rows-only checks. */
+  def md5Lane(sparkExpr: String): String =
+    s"cast(conv(substring(md5($sparkExpr), 1, 15), 16, 10) as bigint)"
+  def md5LaneDuck(duckExpr: String): String =
+    s"(('0x' || substr(md5($duckExpr), 1, 15))::BIGINT)"
 }

@@ -35,12 +35,6 @@ import Q._
 object Scale {
 
   private val wordsExpr = "split(trim(text), '\\\\s+')"
-  /** 60-bit lane from md5's first 15 hex chars — same cross-engine idiom
-    * as the LSH family (Spark `conv`, DuckDB `'0x' || substr`). */
-  private def lane(e: String): String =
-    s"cast(conv(substring(md5($e), 1, 15), 16, 10) as bigint)"
-  private def laneDuck(e: String): String =
-    s"(('0x' || substr(md5($e), 1, 15))::BIGINT)"
 
   // ---------- distributed power iteration (top principal direction) ----------
 
@@ -185,7 +179,7 @@ object Scale {
     * `spark.sql.shuffle.partitions` and deciding salting. */
   def auditShuffleBalance(s: SparkSession, d: String): DataFrame = {
     val loads = t(s, d, "events")
-      .select((expr(lane("cast(user_id as string)")) % Buckets).as("b"))
+      .select((expr(md5Lane("cast(user_id as string)")) % Buckets).as("b"))
       .groupBy("b").agg(count(lit(1)).as("load"))
     loads.agg(count(lit(1)).as("n_buckets"),
         max("load").as("max_load"), min("load").as("min_load"),
@@ -196,7 +190,7 @@ object Scale {
           .as("imbalance"))
   }
   val auditShuffleBalanceSql: String =
-    s"""WITH l AS (SELECT ${laneDuck("CAST(user_id AS VARCHAR)")} % $Buckets
+    s"""WITH l AS (SELECT ${md5LaneDuck("CAST(user_id AS VARCHAR)")} % $Buckets
       |      AS b, CAST(count(*) AS BIGINT) AS load
       |  FROM events GROUP BY 1)
       |SELECT CAST(count(*) AS BIGINT) AS n_buckets,
@@ -278,7 +272,7 @@ object Scale {
       .select(col("doc_id"), col("ws"),
         explode(expr(s"sequence(1, size(ws) - ${WinK - 1})")).as("p"))
       .select(col("doc_id"), col("p"),
-        expr(lane(s"concat_ws(' ', slice(ws, p, $WinK))")).as("h"))
+        expr(md5Lane(s"concat_ws(' ', slice(ws, p, $WinK))")).as("h"))
     val win = Window.partitionBy("doc_id").orderBy("p")
       .rowsBetween(-(WinW - 1), 0)
     g.withColumn("mh", min("h").over(win))
@@ -289,7 +283,7 @@ object Scale {
     raw"""WITH d AS (SELECT doc_id,
          |    string_split_regex(trim(text), '\s+') AS ws FROM documents),
          |g AS (SELECT doc_id, p,
-         |    ${laneDuck(s"array_to_string(list_slice(ws, p, p + ${WinK - 1}), ' ')")} AS h
+         |    ${md5LaneDuck(s"array_to_string(list_slice(ws, p, p + ${WinK - 1}), ' ')")} AS h
          |  FROM d, unnest(range(1, len(ws) - ${WinK - 2})) AS t(p)
          |  WHERE len(ws) >= $WinK),
          |m AS (SELECT doc_id, p, h,

@@ -473,21 +473,22 @@ object Tpch {
        |  AND l_shipdate < TIMESTAMP '1996-10-01'""".stripMargin
 
   def q15(s: SparkSession, d: String): DataFrame = {
-    // ONE fact pass: the per-supplier revenue aggregate materializes once
-    // (localCheckpoint, ~#suppliers rows) and serves both consumers — the
-    // max-revenue threshold and the supplier join — instead of re-running
-    // the filtered lineitem aggregation for each (the q11 shape).
+    // ONE fact pass, built without a job (the q11 shape): the max-revenue
+    // threshold is an empty-frame window over the reduced per-supplier
+    // stream (~#suppliers rows), so the filtered lineitem aggregate feeds
+    // both the threshold and the supplier join without a pin or a second
+    // aggregation.
     val rev = li(s, d).filter(
         col("l_shipdate") >= ts("1996-01-01") &&
           col("l_shipdate") < ts("1996-04-01"))
       .groupBy(col("l_suppkey").as("supplier_no"))
       .agg(dsum(discPrice).as("total_revenue"))
-      .localCheckpoint()
-    val mx = rev.agg(max("total_revenue").as("max_rev"))
-    supp(s, d)
-      .join(rev, col("s_suppkey") === col("supplier_no"))
-      .join(broadcast(mx))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy()
+    val top = rev
+      .withColumn("max_rev", max(col("total_revenue")).over(w))
       .filter(col("total_revenue") === col("max_rev"))
+    supp(s, d)
+      .join(top, col("s_suppkey") === col("supplier_no"))
       .select("s_suppkey", "s_name", "total_revenue")
       .orderBy(col("s_suppkey"))
   }

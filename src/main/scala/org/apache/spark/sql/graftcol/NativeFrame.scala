@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** DataFrame ⇄ InternalRow-RDD bridge for graft's distributed-rank
-  * primitives (the same shim pattern as [[NativeColumn]] /
+/** DataFrame ⇄ InternalRow-RDD bridge for `graft.Q.rankScan`, the one
+  * pinned range scan behind graft's distributed-rank primitives: its
+  * census job and its position pass both read the pinned partition
+  * iterators through here (the same shim pattern as [[NativeColumn]] /
   * [[org.apache.spark.sql.graftarrow.ArrowBridge]]).
   *
   * Motivation (round 20): a `Window.partitionBy(spark_partition_id())`
@@ -32,13 +34,4 @@ object NativeFrame {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
-
-  /** Internal→external row converter for a schema (the conversion
-    * `DataFrame.collect` applies), for callers that collect a handful of
-    * internal rows themselves. */
-  def toScalaRow(schema: StructType): InternalRow => org.apache.spark.sql.Row = {
-    val f = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(schema)
-    (r: InternalRow) => f(r).asInstanceOf[org.apache.spark.sql.Row]
-  }
 }

@@ -170,6 +170,60 @@ class QualitySpec extends AnyFunSuite {
     } finally conf.set("spark.sql.shuffle.partitions", saved)
   }
 
+  test("distPrefixSum matches the window running sum at width 5") {
+    // equal to sum(w) OVER (ORDER BY v, k ROWS UNBOUNDED PRECEDING) on
+    // every row but a leading all-null prefix, where the window sum is
+    // NULL and the primitive reads 0; the total is sum(w)
+    import org.apache.spark.sql.expressions.Window
+    val conf = spark.conf
+    val saved = conf.get("spark.sql.shuffle.partitions")
+    try {
+      conf.set("spark.sql.shuffle.partitions", "5")
+      // heavy ties on v (7 values) broken by the unique key; weights are
+      // null on a leading run of the order and on every fifth key
+      val k = col("o_orderkey")
+      val v = pmod(k, lit(7)).cast("long")
+      val src = Q.t(spark, sf, "orders").select(k.as("k"), v.as("v"),
+        when(v === 0 && k < 200, lit(null)).when(k % 5 === 0, lit(null))
+          .otherwise(k % 13).cast("long").as("w"))
+      val order = Seq(col("v"), col("k"))
+      val (df, total) = Q.distPrefixSumWithTotal(src, "w", "ps", order: _*)
+      val mine = df.collect()
+        .map(r => r.getAs[Long]("k") -> r.getAs[Long]("ps")).toMap
+      val twin = src.withColumn("ps", sum(col("w")).over(Window.orderBy(order: _*)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .collect().map(r => r.getAs[Long]("k") ->
+          (r.isNullAt(r.fieldIndex("w")), Option(r.getAs[java.lang.Long]("ps"))))
+        .toMap
+      assert(mine.keySet == twin.keySet)
+      val leading = twin.collect { case (key, (_, None)) => key }
+      assert(leading.nonEmpty, "the order must open with null weights")
+      assert(twin.exists { case (_, (wNull, ps)) => wNull && ps.nonEmpty },
+        "a null weight must also follow the leading prefix")
+      twin.foreach { case (key, (_, ps)) =>
+        assert(mine(key) == ps.fold(0L)(_.longValue), s"k=$key")
+      }
+      assert(total == src.agg(sum("w")).first().getLong(0))
+    } finally conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
+  test("each distributed-rank primitive starts a fixed number of jobs") {
+    // the eager pin, census and boundary jobs of one call each, as
+    // counted before the three primitives shared one core; a change to
+    // that core must not add a pass unnoticed
+    val src = Q.t(spark, sf, "orders").select(col("o_orderkey"),
+      col("o_totalprice"), pmod(col("o_orderkey"), lit(3)).cast("long").as("w"))
+    val order = Seq(col("o_totalprice"), col("o_orderkey"))
+    def jobs(body: => Unit): Int = jobsDuring(spark)(body).size
+    val counts = Map(
+      "distPos" -> jobs(Q.distPos(src, "p", order: _*)),
+      "distPrefixSumWithTotal" ->
+        jobs(Q.distPrefixSumWithTotal(src, "w", "ps", order: _*)),
+      "ntileBucketCol" -> jobs(Q.ntileBucketCol(src, 4, order: _*)))
+    assert(counts == Map("distPos" -> 4, "distPrefixSumWithTotal" -> 4,
+      "ntileBucketCol" -> 5))
+  }
+
   test("ntileByBoundaries matches the ntile builtin on every axis") {
     // the r20 broadcast-boundary ntile (event_rfm's quartiles) must be
     // bit-identical to the engine builtin: asc and desc orders, heavy

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +11,22 @@ object SparkSpec {
   val sf: String = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = Harness.session(Harness.Profile(
     cores = 8, shuffle = 8, aqe = true, broadcast = None, parts = 8))
+
+  /** Call sites of the jobs started while `body` runs. */
+  def jobsDuring(s: SparkSession)(body: => Unit): Seq[String] = {
+    val sc = s.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.sortBy(_.stageId).lastOption
+          .fold(s"job ${e.jobId}")(_.name))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.toArray(Array.empty[String]).toSeq
+  }
 }
 
 /** Driver contract: entry() produces rows; every registered query runs and

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,29 +20,13 @@ class TableRegistrationSpec extends AnyFunSuite {
       .foreach(s.catalog.uncacheTable)
   }
 
-  /** Call sites of the jobs started while `body` runs. */
-  private def jobsDuring(s: SparkSession)(body: => Unit): Seq[String] = {
-    val sc = s.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(e.stageInfos.sortBy(_.stageId).lastOption
-          .fold(s"job ${e.jobId}")(_.name))
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.toArray(Array.empty[String]).toSeq
-  }
-
-  /** Every TPC-H query but q15, whose build pins a checkpoint. */
+  /** Every TPC-H query. */
   private val lazyBuilds = SparkEntry.queries.toSeq
-    .filter { case (n, _) => Tpch.queries.contains(n) && n != "q15" }
+    .filter { case (n, _) => Tpch.queries.contains(n) }
     .sortBy(_._1)
 
   private def assertBuildsRunNoJob(s: SparkSession): Unit = {
-    assert(lazyBuilds.size == Tpch.queries.size - 1)
+    assert(lazyBuilds.size == Tpch.queries.size)
     val fired = lazyBuilds.flatMap { case (n, fn) =>
       val jobs = jobsDuring(s)(fn(s, sf))
       if (jobs.isEmpty) None else Some(s"$n: ${jobs.mkString(", ")}")
