@@ -224,6 +224,61 @@ class QualitySpec extends AnyFunSuite {
       "ntileBucketCol" -> 5))
   }
 
+  /** The eight registry ops built on the content-representative scaffold. */
+  private val repFamily = Seq("dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "dedup_groups", "dedup_keep_canonical", "dedup_simhash",
+    "dedup_embedding", "text_containment", "dedup_semantic")
+
+  test("each content-representative dedup op starts a fixed number of jobs") {
+    // the election and signature pins (plus dedup_groups' pair pin and
+    // count, the embedding width probe and dedup_semantic's seed collect)
+    // that one build runs, as counted before the family shared one core;
+    // a fresh session with the tables registered keeps schema inference
+    // out of the count
+    val s = spark.newSession()
+    Q.registerAll(s, sf)
+    val counts = repFamily.map { n =>
+      n -> jobsDuring(s)(SparkEntry.queries(n)(s, sf)).size }.toMap
+    assert(counts == Map("dedup_ngram_jaccard" -> 4, "dedup_minhash_lsh" -> 4,
+      "dedup_groups" -> 11, "dedup_keep_canonical" -> 11, "dedup_simhash" -> 4,
+      "dedup_embedding" -> 7, "text_containment" -> 4, "dedup_semantic" -> 8))
+  }
+
+  test("the content-representative family is invariant to the shuffle width") {
+    // the six callers of the shared election return the same rows at
+    // widths 1 and 7 as at the suite's width. sf0.001 has no embedding
+    // near-dups, so the embedding ops also run over a synthetic set with
+    // an exact-copy group and a tight near-dup cluster (cross and
+    // within-group pairs both)
+    val dim = 16
+    val rnd = new scala.util.Random(5)
+    val basis = Array.fill(dim)(rnd.nextGaussian())
+    val vecs = (0 until 40).map { id =>
+      val v =
+        if (id < 4) basis.map(_.toFloat)
+        else if (id < 8) basis.zipWithIndex.map { case (x, i) =>
+          (x + 0.004 * id * ((i % 3) - 1)).toFloat }
+        else Array.fill(dim)(rnd.nextGaussian().toFloat)
+      (id.toLong, v)
+    }
+    val embDir = java.nio.file.Files.createTempDirectory("graft_reps").toString
+    spark.createDataFrame(vecs).toDF("vec_id", "embedding")
+      .write.parquet(s"$embDir/embeddings.parquet")
+    val runs = Seq("dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash",
+      "text_containment", "dedup_semantic").map(_ -> sf) ++
+      Seq("dedup_embedding", "dedup_semantic").map(_ -> embDir)
+    val s = spark.newSession()
+    Q.registerAll(s, sf)
+    def rows(run: (String, String)): Seq[String] =
+      SparkEntry.queries(run._1)(s, run._2).collect().map(_.toString).toSeq
+    val base = runs.map(r => r -> rows(r)).toMap
+    assert(base.values.forall(_.nonEmpty), base.map { case (r, v) => r -> v.size })
+    for (w <- Seq("1", "7")) {
+      s.conf.set("spark.sql.shuffle.partitions", w)
+      runs.foreach(r => assert(rows(r) == base(r), s"$r at width $w"))
+    }
+  }
+
   test("ntileByBoundaries matches the ntile builtin on every axis") {
     // the r20 broadcast-boundary ntile (event_rfm's quartiles) must be
     // bit-identical to the engine builtin: asc and desc orders, heavy
