@@ -16,7 +16,8 @@ import Q._
   * hash-bucket shuffles (LSH bands / MinHash buckets) rather than global
   * cross or blocked joins, and nothing collects to the driver. At 100 TB
   * the same plans shard by bucket. The intentionally-quadratic brute-force
-  * twins (`*Brute`) exist only as spec ground truth and are not registered.
+  * twins that the specs check these plans against live in the test tree
+  * (`graft.DedupBrute`).
   */
 object Pipeline {
 
@@ -295,7 +296,7 @@ object Pipeline {
   // one generated loop per document instead of ~3 interpreted lambda
   // closures per gram; [[gramsExprHof]] keeps the HOF formulation as
   // executable documentation (pinned row-equal in PipelineSpec).
-  private val gramsExpr: Column =
+  private[graft] val gramsExpr: Column =
     org.apache.spark.sql.graftcol.NativeColumn.column(
       graft.functions.WordTrigramSet(
         org.apache.spark.sql.graftcol.NativeColumn.expression(expr(wordsExpr))))
@@ -359,61 +360,32 @@ object Pipeline {
             org.apache.spark.sql.graftcol.NativeColumn.expression(
               expr(wordsExpr)), 3)).as("hs"))
       .withColumn("gh", xxhash64(col("hs")))
-      .localCheckpoint() // read thrice: reps, members, within-group pairs
-    val members = docs.select("doc_id", "gh")
-    val reps = docs.groupBy("gh").agg(min("doc_id").as("rep"))
-      .join(docs.select(col("doc_id").as("rep"), col("hs")), "rep")
-      .localCheckpoint() // distinct-content subset: banding input
-    // seeded min-gram-hash bands over the hashed grams — one generated
-    // loop per rep; the posexplode position IS the band index
-    val banded = reps.select(col("rep"), posexplode(
-        org.apache.spark.sql.graftcol.NativeColumn.column(
-          graft.functions.BandedMinLongHashes(
-            org.apache.spark.sql.graftcol.NativeColumn.expression(col("hs")),
-            nSeeds))).as(Seq("band", "bh")))
+    // the hashed grams ride the member pin (one kernel run per document);
+    // the seeded min-gram-hash bands fold once per rep, and the
+    // posexplode position IS the band index
+    val (members, reps) = contentReps(docs, "doc_id", "gh") { _ => Seq(
+      org.apache.spark.sql.graftcol.NativeColumn.column(
+        graft.functions.BandedMinLongHashes(
+          org.apache.spark.sql.graftcol.NativeColumn.expression(col("hs")),
+          nSeeds)).as("bmh")) }
+    val banded = reps.select(col("rep"), posexplode(col("bmh")).as(Seq("band", "bh")))
     // candidate rep pairs, deduped BEFORE the exact verify
     val cands = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.rep") < col("y.rep"))
       .select(col("x.rep").as("r1"), col("y.rep").as("r2")).distinct()
     val repPairs = cands
-      .join(reps.select(col("rep").as("r1"), col("gh").as("gh1"),
-        col("hs").as("h1")), "r1")
-      .join(reps.select(col("rep").as("r2"), col("gh").as("gh2"),
-        col("hs").as("h2")), "r2")
+      .join(reps.select(col("rep").as("r1"), col("hs").as("h1")), "r1")
+      .join(reps.select(col("rep").as("r2"), col("hs").as("h2")), "r2")
       .withColumn("ni", size(array_intersect(col("h1"), col("h2"))))
       .withColumn("jaccard", round(col("ni").cast("double") /
         (size(col("h1")) + size(col("h2")) - col("ni")), 6))
       .filter(col("jaccard") >= 0.2)
-      .select("gh1", "gh2", "jaccard")
-    // reconstruct the full pair set: cross-group pairs inherit the rep
-    // Jaccard; within-group pairs are exact copies (Jaccard 1.0)
-    val cross = repPairs
-      .join(members.select(col("gh").as("gh1"), col("doc_id").as("da")), "gh1")
-      .join(members.select(col("gh").as("gh2"), col("doc_id").as("db")), "gh2")
-      .select(least(col("da"), col("db")).as("doc1"),
-        greatest(col("da"), col("db")).as("doc2"), col("jaccard"))
-    val within = members.as("m").join(members.as("n"),
-        col("m.gh") === col("n.gh") && col("m.doc_id") < col("n.doc_id"))
-      .select(col("m.doc_id").as("doc1"), col("n.doc_id").as("doc2"),
-        lit(1.0).as("jaccard"))
-    cross.unionByName(within)
-      .select("doc1", "doc2", "jaccard")
-      .orderBy("doc1", "doc2")
-  }
-  /** Brute-force all-pairs twin of [[dedupNgramJaccard]] — the spec's ground
-    * truth for the banded candidate generator (kept out of the registry; its
-    * triangular join is the shape the default plan exists to avoid). */
-  def dedupNgramJaccardBrute(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents").select(col("doc_id"), gramsExpr.as("g"))
-    val a = docs.select(col("doc_id").as("doc1"), col("g").as("g1"))
-    val b = docs.select(col("doc_id").as("doc2"), col("g").as("g2"))
-    a.join(b, col("doc1") < col("doc2"))
-      .withColumn("jaccard", round(
-        size(array_intersect(col("g1"), col("g2"))).cast("double") /
-          size(array_union(col("g1"), col("g2"))), 6))
-      .filter(col("jaccard") >= 0.2)
-      .select("doc1", "doc2", "jaccard")
+      .select("r1", "r2", "jaccard")
+    // cross-group pairs inherit the rep Jaccard; within-group pairs are
+    // exact copies (Jaccard 1.0)
+    expandRepPairs(members, "doc_id", repPairs,
+      reps.select(col("rep"), lit(1.0).as("jaccard")), "doc1", "doc2")
       .orderBy("doc1", "doc2")
   }
   val dedupNgramJaccardSql: String =
@@ -533,21 +505,6 @@ object Pipeline {
        |      transform(slice(mh, b * $BandSize + 1, $BandSize),
        |        x -> cast(x as string)))))""".stripMargin)
 
-  /** MinHash + LSH near-dup pairs: shingle → minhash → band → bucket-join.
-    * Candidate pairs only ever meet inside an LSH band bucket (shuffle on
-    * the band key), so the plan scales linearly with corpus size times
-    * bucket skew — the standard 100 TB-safe dedup topology. The band key
-    * is the joined text of the band's lanes (portable), and the lanes are
-    * md5-derived, so the DuckDB oracle reproduces the banding exactly. */
-  /** Distinct-content scaffolding shared by the MinHash family
-    * (round-10 exact-copy short-circuit, round-11 extracted so
-    * [[dedupGroups]] can consume REP pairs without reconstructing the
-    * full pair set): signatures, banding, and the lane-agreement
-    * estimate run on distinct-content representatives only — identical
-    * texts produce identical signatures, so banding recall and every
-    * estimate are unchanged. Returns (members: one (doc_id, th) row per
-    * document; repPairs: verified representative pairs (r1 < r2) with
-    * their text hashes and est_jaccard ≥ 0.5). */
   /** `round(#equal lanes / NumHashes, 4)` through the codegen'd
     * [[graft.functions.EqualLaneCount]] kernel — bit-identical to the
     * `size(filter(zip_with(a, b, (x, y) -> x = y), v -> v)) / 32.0`
@@ -562,58 +519,70 @@ object Pipeline {
         org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
       / lit(NumHashes).cast("double"), 4)
 
-  private[graft] def minhashScaffold(
-      s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val byText = t(s, d, "documents")
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("th"))
-      .localCheckpoint() // read twice: members + rep election
-    val members = byText.select("doc_id", "th")
-    val reps = byText.groupBy("th").agg(min("doc_id").as("rep"))
-      .join(t(s, d, "documents").select(col("doc_id").as("rep"), col("text")),
-        "rep")
-      .select(col("rep"), col("th"), minhashSignature.as("mh"))
-      .localCheckpoint() // signatures computed once, read by both sides
-    val bands = reps.select(
-      col("rep"), col("th"), col("mh"),
-      explode(minhashBandStructs).as("band"))
-      .select(col("rep"), col("th"), col("mh"), col("band.band").as("band"),
+  /** [[Q.contentReps]] over the documents keyed by the md5 of their
+    * text: the text is read again for the representatives only, where
+    * `sigs` fold over it. */
+  private def textReps(s: SparkSession, d: String)(
+      sigs: Column*): (DataFrame, DataFrame) = {
+    val docs = t(s, d, "documents")
+    contentReps(
+      docs.select(col("doc_id"), md5(col("text").cast("binary")).as("th")),
+      "doc_id", "th", Some(docs.select("doc_id", "text")))(_ => sigs)
+  }
+
+  /** Distinct-content scaffolding shared by the MinHash family
+    * (round-10 exact-copy short-circuit, round-11 extracted so
+    * [[dedupGroups]] can consume REP pairs without reconstructing the
+    * full pair set): signatures, banding, and the lane-agreement
+    * estimate run on distinct-content representatives only — identical
+    * texts produce identical signatures, so banding recall and every
+    * estimate are unchanged. Returns (members: one (doc_id, th, rep) row
+    * per document; reps: the pinned signatures; repPairs: verified
+    * representative pairs (r1 < r2) with est_jaccard ≥ 0.5). */
+  private def minhashReps(s: SparkSession,
+      d: String): (DataFrame, DataFrame, DataFrame) = {
+    val (members, reps) = textReps(s, d)(minhashSignature.as("mh"))
+    val bands = reps.select(col("rep"), col("mh"),
+        explode(minhashBandStructs).as("band"))
+      .select(col("rep"), col("mh"), col("band.band").as("band"),
         col("band.bh").as("bh"))
     val a = bands.select(col("band"), col("bh"), col("rep").as("r1"),
-      col("th").as("th1"), col("mh").as("mh1"))
+      col("mh").as("mh1"))
     val b = bands.select(col("band").as("band2"), col("bh").as("bh2"),
-      col("rep").as("r2"), col("th").as("th2"), col("mh").as("mh2"))
+      col("rep").as("r2"), col("mh").as("mh2"))
     val repPairs = a.join(b,
         col("band") === col("band2") && col("bh") === col("bh2") &&
           col("r1") < col("r2"))
-      .select(col("r1"), col("r2"), col("th1"), col("th2"),
-        col("mh1"), col("mh2")).distinct()
-      .select(col("r1"), col("r2"), col("th1"), col("th2"),
+      .select(col("r1"), col("r2"), col("mh1"), col("mh2")).distinct()
+      .select(col("r1"), col("r2"),
         estJaccard(col("mh1"), col("mh2")).as("est_jaccard"))
       .filter(col("est_jaccard") >= 0.5)
-    (members, repPairs)
+    (members, reps, repPairs)
   }
 
+  /** [[minhashReps]]' members as (doc_id, th) and its rep pairs: what
+    * [[dedupGroups]] solves components over. */
+  private[graft] def minhashScaffold(
+      s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val (members, _, repPairs) = minhashReps(s, d)
+    (members.select("doc_id", "th"), repPairs)
+  }
+
+  /** MinHash + LSH near-dup pairs: shingle → minhash → band → bucket-join.
+    * Candidate pairs only ever meet inside an LSH band bucket (shuffle on
+    * the band key), so the plan scales linearly with corpus size times
+    * bucket skew — the standard 100 TB-safe dedup topology. The band key
+    * is the joined text of the band's lanes (portable), and the lanes are
+    * md5-derived, so the DuckDB oracle reproduces the banding exactly.
+    * The full pair set is reconstructed exactly from the rep pairs:
+    * within-group pairs agree on all lanes (est 1.0), cross-group pairs
+    * inherit their representatives' estimate. */
   def dedupMinhashLsh(s: SparkSession, d: String): DataFrame = {
-    // the full pair set is reconstructed exactly from the rep pairs:
-    // within-group pairs agree on all lanes (est 1.0), cross-group
-    // pairs inherit their representatives' estimate.
-    val (members, repPairs) = minhashScaffold(s, d)
-    val cross = repPairs
-      .join(members.select(col("th").as("th1"), col("doc_id").as("da")), "th1")
-      .join(members.select(col("th").as("th2"), col("doc_id").as("db")), "th2")
-      .select(least(col("da"), col("db")).as("doc1"),
-        greatest(col("da"), col("db")).as("doc2"), col("est_jaccard"))
-    val within = members.as("m").join(members.as("n"),
-        col("m.th") === col("n.th") && col("m.doc_id") < col("n.doc_id"))
-      .select(col("m.doc_id").as("doc1"), col("n.doc_id").as("doc2"),
-        lit(1.0).as("est_jaccard"))
-    cross.unionByName(within)
+    val (members, reps, repPairs) = minhashReps(s, d)
+    expandRepPairs(members, "doc_id", repPairs,
+      reps.select(col("rep"), lit(1.0).as("est_jaccard")), "doc1", "doc2")
       .orderBy("doc1", "doc2")
   }
-  /** Shared CTE prefix rebuilding the MinHash signatures, band buckets and
-    * verified candidate pairs — used by both the pair-list oracle and the
-    * connected-components oracle so the two queries provably run over the
-    * same pair set. */
   /** Shared `sigs` + `bands` CTE pair (MinHash signatures and band
     * buckets) — the common prefix of every MinHash-family oracle. */
   private val minhashSigBandCtes: String = {
@@ -636,6 +605,10 @@ object Pipeline {
          |    array_to_string(mh[(b * $BandSize + 1):(b * $BandSize + $BandSize)], ',') AS bh
          |  FROM sigs, generate_series(0, ${NumHashes / BandSize - 1}) t(b))""".stripMargin
   }
+  /** Shared CTE prefix rebuilding the MinHash signatures, band buckets and
+    * verified candidate pairs — used by both the pair-list oracle and the
+    * connected-components oracle so the two queries provably run over the
+    * same pair set. */
   private val minhashPairsCtes: String =
     raw"""$minhashSigBandCtes,
          |pairs AS (
@@ -935,23 +908,6 @@ object Pipeline {
          |  s.cluster_size
          |FROM alld a JOIN sizes s USING (cluster_id) ORDER BY doc_id""".stripMargin
 
-  /** SimHash near-dup pairs: 32-bit signature from md5-lane word hashes,
-    * candidates from matching 16-bit halves (Hamming ≤ pigeonhole),
-    * verified with bit_count(xor) ≤ 3. Fully oracle-checked — the DuckDB
-    * SQL rebuilds the identical signatures and half-key buckets. Each
-    * word is md5-hashed ONCE into a lane array and the 32 bit-majority
-    * folds run over the precomputed lanes (round 10 — the previous form
-    * re-derived the md5 inside every bit's fold: 32 md5 calls per word,
-    * ~200M md5s at the 10× corpus; identical signature values, so the
-    * oracle is unchanged).
-    *
-    * Round-10 exact-copy short-circuit (the [[dedupNgramJaccard]]
-    * pattern): identical texts collapse to one representative before
-    * signature computation and the half-key bucket join — equal text ⇒
-    * equal signature ⇒ Hamming 0 within a group and the representatives'
-    * Hamming across groups — then the full pair set is reconstructed
-    * exactly. Candidate rep pairs are verified once (not once per
-    * colliding half). Output is unchanged, oracle unchanged. */
   /** The pure-SQL SimHash signature over a `text` column — 32 bit-vote
     * folds over the word md5-lane array. Kept as executable
     * documentation of what [[graft.functions.SimHashSignature]]'s
@@ -975,47 +931,46 @@ object Pipeline {
       graft.functions.SimHashSignature(
         org.apache.spark.sql.graftcol.NativeColumn.expression(col("text"))))
 
+  /** SimHash near-dup pairs: 32-bit signature from md5-lane word hashes,
+    * candidates from matching 16-bit halves (Hamming ≤ pigeonhole),
+    * verified with bit_count(xor) ≤ 3. Fully oracle-checked — the DuckDB
+    * SQL rebuilds the identical signatures and half-key buckets. Each
+    * word is md5-hashed ONCE into a lane array and the 32 bit-majority
+    * folds run over the precomputed lanes (round 10 — the previous form
+    * re-derived the md5 inside every bit's fold: 32 md5 calls per word,
+    * ~200M md5s at the 10× corpus; identical signature values, so the
+    * oracle is unchanged).
+    *
+    * Round-10 exact-copy short-circuit (the [[dedupNgramJaccard]]
+    * pattern): identical texts collapse to one representative before
+    * signature computation and the half-key bucket join — equal text ⇒
+    * equal signature ⇒ Hamming 0 within a group and the representatives'
+    * Hamming across groups — then the full pair set is reconstructed
+    * exactly. Candidate rep pairs are verified once (not once per
+    * colliding half). Output is unchanged, oracle unchanged. */
   def dedupSimhash(s: SparkSession, d: String): DataFrame = {
-    val byText = t(s, d, "documents")
-      .select(col("doc_id"), md5(col("text").cast("binary")).as("th"))
-      .localCheckpoint() // read twice: members + rep election
-    val members = byText.select("doc_id", "th")
-    val reps = byText.groupBy("th").agg(min("doc_id").as("rep"))
-      .join(t(s, d, "documents").select(col("doc_id").as("rep"), col("text")),
-        "rep")
-      // round-11: the signature evaluates through the native codegen'd
-      // kernel — one generated loop per rep instead of 32 interpreted
-      // bit-vote folds over the lane array
-      .select(col("rep"), col("th"), simhashSignature.as("sh"))
-      .localCheckpoint() // signatures computed once, read by both join sides
-    val keyed = reps.select(col("rep"), col("th"), col("sh"),
+    // round-11: the signature evaluates through the native codegen'd
+    // kernel — one generated loop per rep instead of 32 interpreted
+    // bit-vote folds over the lane array
+    val (members, reps) = textReps(s, d)(simhashSignature.as("sh"))
+    val keyed = reps.select(col("rep"), col("sh"),
       explode(array(
         struct(lit(0).as("half"), (col("sh") % 65536).as("hk")),
         struct(lit(1).as("half"), shiftright(col("sh"), 16).as("hk")))).as("k"))
-      .select(col("rep"), col("th"), col("sh"),
-        col("k.half").as("half"), col("k.hk").as("hk"))
+      .select(col("rep"), col("sh"), col("k.half").as("half"), col("k.hk").as("hk"))
     val a = keyed.select(col("half"), col("hk"), col("rep").as("r1"),
-      col("th").as("th1"), col("sh").as("sh1"))
+      col("sh").as("sh1"))
     val b = keyed.select(col("half").as("half2"), col("hk").as("hk2"),
-      col("rep").as("r2"), col("th").as("th2"), col("sh").as("sh2"))
+      col("rep").as("r2"), col("sh").as("sh2"))
     val repPairs = a.join(b,
         col("half") === col("half2") && col("hk") === col("hk2") &&
           col("r1") < col("r2"))
-      .select("th1", "th2", "sh1", "sh2").distinct() // verify once per pair
+      .select("r1", "r2", "sh1", "sh2").distinct() // verify once per pair
       .withColumn("hamming", bit_count(col("sh1").bitwiseXOR(col("sh2"))).cast("long"))
       .filter(col("hamming") <= 3)
-      .select("th1", "th2", "hamming")
-    val cross = repPairs
-      .join(members.select(col("th").as("th1"), col("doc_id").as("da")), "th1")
-      .join(members.select(col("th").as("th2"), col("doc_id").as("db")), "th2")
-      .select(least(col("da"), col("db")).as("doc1"),
-        greatest(col("da"), col("db")).as("doc2"), col("hamming"))
-    val within = members.as("m").join(members.as("n"),
-        col("m.th") === col("n.th") && col("m.doc_id") < col("n.doc_id"))
-      .select(col("m.doc_id").as("doc1"), col("n.doc_id").as("doc2"),
-        lit(0L).as("hamming"))
-    cross.unionByName(within)
-      .select("doc1", "doc2", "hamming")
+      .select("r1", "r2", "hamming")
+    expandRepPairs(members, "doc_id", repPairs,
+      reps.select(col("rep"), lit(0L).as("hamming")), "doc1", "doc2")
       .orderBy("doc1", "doc2")
   }
   val dedupSimhashSql: String =
@@ -1043,21 +998,6 @@ object Pipeline {
          |WHERE hamming <= 3 ORDER BY doc1, doc2""".stripMargin
 
   // ---------- similarity search ----------
-
-  // Native codegen'd dot/norm (round 14): same sequential fold as the
-  // HOF formulation (acc += a[i]*b[i], one generated loop — zip_with/
-  // aggregate interpret their lambdas), so cosines and oracles are
-  // bit-unchanged. norm2 = sqrt(dot(a, a)) is the exact Σx² fold.
-  // ASSUMES non-null elements and equal lengths (true of this corpus's
-  // fixed-dim embeddings, and what the oracle's list_inner_product
-  // assumes too): the kernel reads a null slot as 0.0 and THROWS on a
-  // length mismatch, where the HOF null-propagated / null-padded.
-  private def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftcol.NativeColumn.column(
-      graft.functions.InnerProduct(
-        org.apache.spark.sql.graftcol.NativeColumn.expression(a),
-        org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
-  private def norm2(a: Column): Column = sqrt(dot(a, a))
 
   /** Brute-force cosine top-k (k=5) for query vectors vec_id < 10 — the
     * exact baseline the LSH variant is checked against. Vectors are cast
@@ -1496,7 +1436,7 @@ object Pipeline {
     * so 8-bit bands keep per-pair recall ≈ 0.99 while a 256-value band key
     * keeps buckets small. Candidates only ever meet through an equi-join on
     * (band, band-bits) — the scale topology; the triangular O(N²) join
-    * lives only in [[dedupEmbeddingBrute]] as the spec's ground truth.
+    * lives only in the spec's brute-force ground truth.
     * The plane matrix is precomputed once driver-side and constant-folded
     * into the plan ([[planeMatrix]] — round 10; previously 64·d md5 calls
     * per row); at 100 TB raise the band width with log N.
@@ -1530,18 +1470,13 @@ object Pipeline {
          |        (x, w) -> x * w),
          |      cast(0.0 as double), (a2, x) -> a2 + x) > 0
          |    then 1 else 0 end)""".stripMargin)
-    val all = t(s, d, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-      .localCheckpoint() // read for groups, reps, and member expansion
-    val members = all.groupBy("v").agg(min("vec_id").as("rep"))
-      .join(all, "v").select(col("vec_id"), col("rep"))
-      .localCheckpoint()
-    val reps = all.join(members.filter(col("vec_id") === col("rep"))
-        .select("vec_id"), "vec_id")
-      .select(col("vec_id").as("rep"), col("v"))
-      .localCheckpoint() // distinct-content subset: banding input
-    val banded = reps.withColumn("bits", bitsExpr)
-      .select(col("rep"), explode(expr(
+    // the vector is its own content key; the sign bits and the norm fold
+    // once per rep. nrm1·nrm2 is bit-identical to folding both norms
+    // inside the pair row, so the oracle still hash-matches
+    val (members, reps) = contentReps(t(s, d, "embeddings")
+        .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v")),
+      "vec_id", "v") { _ => Seq(bitsExpr.as("bits"), norm2(col("v")).as("nrm")) }
+    val banded = reps.select(col("rep"), explode(expr(
         s"""transform(sequence(0, ${nPlanes / bandBits - 1}), b -> named_struct(
            |  'band', b,
            |  'bh', aggregate(slice(bits, b * $bandBits + 1, $bandBits),
@@ -1552,60 +1487,31 @@ object Pipeline {
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.rep") < col("y.rep"))
       .select(col("x.rep").as("r1"), col("y.rep").as("r2")).distinct()
-    // norms fold once per rep; nrm1·nrm2 is bit-identical to folding
-    // both norms inside the pair row, so the oracle still hash-matches
-    val repsN = reps.withColumn("nrm", norm2(col("v")))
+    // try_divide: a zero vector's norm product is 0, and under ANSI mode
+    // even DOUBLE 0/0 throws DIVIDE_BY_ZERO — the null result falls out
+    // of the threshold filter instead. The isnan leg guards NaN payloads
+    // in the data (NaN compares GREATER than any number in both Spark and
+    // DuckDB, so `NaN >= 0.95` alone would keep the pair — the oracle SQL
+    // carries the same NOT isnan).
+    def near(cos: Column): Column = cos >= 0.95 && !isnan(cos)
     val repPairs = cands
-      .join(repsN.select(col("rep").as("r1"), col("v").as("v1"),
+      .join(reps.select(col("rep").as("r1"), col("v").as("v1"),
         col("nrm").as("n1")), "r1")
-      .join(repsN.select(col("rep").as("r2"), col("v").as("v2"),
+      .join(reps.select(col("rep").as("r2"), col("v").as("v2"),
         col("nrm").as("n2")), "r2")
-      // try_divide: a zero vector's norm product is 0, and under ANSI
-      // mode even DOUBLE 0/0 throws DIVIDE_BY_ZERO — the null result
-      // falls out of the threshold filter instead (isnan covers NaN
-      // payloads arriving in the data itself)
       .withColumn("cos",
         try_divide(dot(col("v1"), col("v2")), col("n1") * col("n2")))
-      .filter(col("cos") >= 0.95 && !isnan(col("cos")))
+      .filter(near(col("cos")))
       .select(col("r1"), col("r2"), col("cos"))
-    // reconstruct the full pair set: cross-group pairs inherit the rep
-    // cosine; within-group pairs take the rep's self-cosine (same fold)
-    val cross = repPairs
-      .join(members.select(col("rep").as("r1"), col("vec_id").as("m1")), "r1")
-      .join(members.select(col("rep").as("r2"), col("vec_id").as("m2")), "r2")
-      .select(least(col("m1"), col("m2")).as("id1"),
-        greatest(col("m1"), col("m2")).as("id2"), col("cos"))
+    // cross-group pairs inherit the rep cosine; within-group pairs take
+    // the rep's self-cosine through the SAME fold (nrm·nrm is bitwise
+    // norm2(v)·norm2(v)), so a duplicated all-zero vector's
+    // try_divide(0, 0) = null drops out of the threshold
     val selfCos = reps
-      .withColumn("cos", try_divide(dot(col("v"), col("v")),
-        norm2(col("v")) * norm2(col("v"))))
-      .select(col("rep"), col("cos"))
-    val within = members.as("m").join(members.as("n"),
-        col("m.rep") === col("n.rep") && col("m.vec_id") < col("n.vec_id"))
-      .select(col("m.vec_id").as("id1"), col("n.vec_id").as("id2"),
-        col("m.rep").as("rep"))
-      .join(selfCos, "rep")
-      // the threshold applies to within-group pairs too: a duplicated
-      // all-zero vector's self-cosine is try_divide(0, 0) = null, which
-      // the filter drops. The isnan leg guards NaN payloads in the data
-      // (NaN compares GREATER than any number in both Spark and DuckDB,
-      // so `NaN >= 0.95` alone would keep the pair — the oracle SQL
-      // carries the same NOT isnan).
-      .filter(col("cos") >= 0.95 && !isnan(col("cos")))
-    cross.unionByName(within.select("id1", "id2", "cos"))
-      .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos_sim"))
-      .orderBy("id1", "id2")
-  }
-  /** Triangular all-pairs twin of [[dedupEmbedding]] — exact ground truth
-    * for the banded plan in DedupSpec; deliberately not in the registry. */
-  def dedupEmbeddingBrute(s: SparkSession, d: String): DataFrame = {
-    val vecs = t(s, d, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-    val a = vecs.select(col("vec_id").as("id1"), col("v").as("v1"))
-    val b = vecs.select(col("vec_id").as("id2"), col("v").as("v2"))
-    a.join(b, col("id1") < col("id2"))
-      .withColumn("cos", try_divide(dot(col("v1"), col("v2")),
-        norm2(col("v1")) * norm2(col("v2"))))
-      .filter(col("cos") >= 0.95 && !isnan(col("cos")))
+      .select(col("rep"), try_divide(dot(col("v"), col("v")),
+        col("nrm") * col("nrm")).as("cos"))
+      .filter(near(col("cos")))
+    expandRepPairs(members, "vec_id", repPairs, selfCos, "id1", "id2")
       .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos_sim"))
       .orderBy("id1", "id2")
   }
@@ -2726,8 +2632,9 @@ object Pipeline {
     * rollup: the token stream never ships raw gram strings to the
     * shuffle, which at 100 TB is the difference between shuffling ~8
     * bytes and ~50 bytes per span. Collision odds at n spans are
-    * ~n²/2⁶⁴ (≈10⁻⁸ at a billion spans); [[dedupSubstringBruteSpans]]
-    * is the raw-string twin the spec checks hash-faithfulness against. */
+    * ~n²/2⁶⁴ (≈10⁻⁸ at a billion spans); the spec checks
+    * hash-faithfulness against a raw-string twin over
+    * [[dedupSubstringOn]]. */
   def dedupSubstring(s: SparkSession, d: String): DataFrame = {
     // Round 15: the per-doc (gram, count) reduce happens INSIDE the
     // NgramMd5LaneCounts kernel loop — the span stream never enters a
@@ -2757,12 +2664,7 @@ object Pipeline {
       s: SparkSession, d: String): DataFrame =
     dedupSubstringOn(gramCol = md5Lane("concat_ws(' ', slice(ws, i, 8))"))(s, d)
 
-  /** Raw-string-gram twin of [[dedupSubstring]] — spec ground truth only
-    * (not registered): identical topology, gram strings as keys. */
-  def dedupSubstringBruteSpans(s: SparkSession, d: String): DataFrame =
-    dedupSubstringOn(gramCol = "concat_ws(' ', slice(ws, i, 8))")(s, d)
-
-  private def dedupSubstringOn(gramCol: String)(
+  private[graft] def dedupSubstringOn(gramCol: String)(
       s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").select(col("doc_id"), expr(wordsExpr).as("ws"))
     // Aggregate-once topology (round 13; previously grams ⋈ spread): the
@@ -4242,10 +4144,6 @@ object Pipeline {
     * (previously an interpreted HOF chain that re-entered the
     * interpreter per position and per distinct shingle). */
   def textContainment(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-    val byText = docs.select(col("doc_id"), md5(col("text")).as("th"))
-      .localCheckpoint() // read thrice: rep election + both expansions
-    val members = byText.select("doc_id", "th")
     // Round 19 (barrier fusion, the dedup_semantic single-pin pattern):
     // the MinHash signature and the distinct-shingle hash array are
     // computed in ONE projection over the distinct-content reps and
@@ -4256,25 +4154,21 @@ object Pipeline {
     // kernels still fold exactly once per rep (the checkpoint
     // materializes them); `bands` re-runs only the cheap band-slice
     // explode per self-join side, from the pinned `mh` attribute.
-    val repDocs = byText.groupBy("th").agg(min("doc_id").as("rep"))
-      .join(docs.select(col("doc_id").as("rep"), col("text")), "rep")
-      .select(col("rep"), col("th"), minhashSignature.as("mh"),
-        org.apache.spark.sql.graftcol.NativeColumn.column(
-          graft.functions.ShingleHashes(
-            org.apache.spark.sql.graftcol.NativeColumn.expression(col("text"))))
-          .as("hsh"))
-      .withColumn("nsh", size(col("hsh")).cast("long"))
-      .localCheckpoint() // distinct-content subset: all heavy stages below
+    val (members, repDocs) = textReps(s, d)(minhashSignature.as("mh"),
+      org.apache.spark.sql.graftcol.NativeColumn.column(
+        graft.functions.ShingleHashes(
+          org.apache.spark.sql.graftcol.NativeColumn.expression(col("text"))))
+        .as("hsh"))
+    val nsh = size(col("hsh")).cast("long")
     val bands = repDocs
-      .select(col("rep"), col("th"), explode(minhashBandStructs).as("k"))
-      .select(col("rep"), col("th"), col("k.band").as("band"), col("k.bh").as("bh"))
-    val repCand = bands.select(col("band"), col("bh"), col("rep").as("r1"),
-        col("th").as("th1"))
+      .select(col("rep"), explode(minhashBandStructs).as("k"))
+      .select(col("rep"), col("k.band").as("band"), col("k.bh").as("bh"))
+    val repCand = bands.select(col("band"), col("bh"), col("rep").as("r1"))
       .join(bands.select(col("band").as("b2"), col("bh").as("h2"),
-        col("rep").as("r2"), col("th").as("th2")),
+        col("rep").as("r2")),
         col("band") === col("b2") && col("bh") === col("h2") &&
           col("r1") < col("r2"))
-      .select("th1", "th2").distinct() // verify once per content pair
+      .select("r1", "r2").distinct() // verify once per content pair
     // verification intersects one 64-bit hash per distinct shingle
     // instead of joining exploded shingle STRINGS: the explode
     // replicated each rep's ~1000 shingles once per candidate pair it
@@ -4283,12 +4177,11 @@ object Pipeline {
     // the banding hash's own determinism argument, gate-checked.
     // Zero-overlap candidates are filtered to match the previous
     // inner-join-then-count semantics (and the oracle's).
-    val repStats = repDocs.select(col("th"), col("hsh"), col("nsh"))
     val repVerify = repCand
-      .join(repStats.select(col("th").as("th1"), col("hsh").as("h1"),
-        col("nsh").as("nsh1")), "th1")
-      .join(repStats.select(col("th").as("th2"), col("hsh").as("h2"),
-        col("nsh").as("nsh2")), "th2")
+      .join(repDocs.select(col("rep").as("r1"), col("hsh").as("h1"),
+        nsh.as("nsh1")), "r1")
+      .join(repDocs.select(col("rep").as("r2"), col("hsh").as("h2"),
+        nsh.as("nsh2")), "r2")
       .withColumn("n_shared",
         // locally a wash vs size(array_intersect(...)) (A/B min 3.18 vs
         // 3.09 s, overlapping spreads) but does not materialize the
@@ -4299,22 +4192,13 @@ object Pipeline {
             org.apache.spark.sql.graftcol.NativeColumn.expression(col("h1")),
             org.apache.spark.sql.graftcol.NativeColumn.expression(col("h2")))))
       .filter(col("n_shared") > 0)
-      .select(col("th1"), col("th2"), col("n_shared"),
+      .select(col("r1"), col("r2"), col("n_shared"),
         round(col("n_shared").cast("double") /
           least(col("nsh1"), col("nsh2")), 6).as("containment"))
-    val cross = repVerify
-      .join(members.select(col("th").as("th1"), col("doc_id").as("da")), "th1")
-      .join(members.select(col("th").as("th2"), col("doc_id").as("db")), "th2")
-      .select(least(col("da"), col("db")).as("doc1"),
-        greatest(col("da"), col("db")).as("doc2"),
-        col("n_shared"), col("containment"))
-    val within = members.as("m").join(members.as("n"),
-        col("m.th") === col("n.th") && col("m.doc_id") < col("n.doc_id"))
-      .join(repStats.withColumnRenamed("th", "wth"),
-        col("m.th") === col("wth"))
-      .select(col("m.doc_id").as("doc1"), col("n.doc_id").as("doc2"),
-        col("nsh").as("n_shared"), lit(1.0).as("containment"))
-    cross.unionByName(within)
+    // a within-group pair shares every shingle: containment 1.0
+    expandRepPairs(members, "doc_id", repVerify,
+      repDocs.select(col("rep"), nsh.as("n_shared"),
+        lit(1.0).as("containment")), "doc1", "doc2")
       .withColumn("near_contained", col("containment") >= 0.5)
       .orderBy("doc1", "doc2")
   }

@@ -823,14 +823,9 @@ object Polish {
     val cLit = cent.map(x => s"${x}D").mkString("array(", ",", ")")
     // dot/norm through the native InnerProduct kernel — the identical
     // sequential left folds (Σ x·c and Σ x², one generated loop per row)
-    def ip(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.graftcol.NativeColumn.column(
-        graft.functions.InnerProduct(
-          org.apache.spark.sql.graftcol.NativeColumn.expression(a),
-          org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
     vecs
-      .withColumn("dot", ip(col("v"), expr(cLit)))
-      .withColumn("nrm", sqrt(ip(col("v"), col("v"))))
+      .withColumn("dot", dot(col("v"), expr(cLit)))
+      .withColumn("nrm", norm2(col("v")))
       .withColumn("cos", try_divide(col("dot"), col("nrm") * lit(cnorm)))
       .filter(col("cos").isNotNull)
       .agg(count(lit(1)).as("n_vecs"),

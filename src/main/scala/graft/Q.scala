@@ -352,6 +352,64 @@ object Q {
       order: Column*): DataFrame =
     distPrefixSumWithTotal(df, weight, out, order: _*)._1
 
+  /** The one content-representative election behind the dedup family
+    * (MinHash-LSH, SimHash, n-gram Jaccard, containment, embedding and
+    * semantic dedup): rows with equal content collapse to ONE
+    * representative, so signatures, banding and verification run on
+    * distinct content only and exact copies ride their representative.
+    *
+    * `keyed` holds the member id, the content key `key` (a content hash,
+    * or the content itself) and any columns the representatives carry.
+    * It is computed once and pinned with `rep` = `min(id)` over its key
+    * (null for a null key, which elects nothing and pairs with nothing).
+    * Rep content comes off that pin, or, when `content` is given
+    * (id → content columns, e.g. the text), is read again for the
+    * representatives only, so it never rides the pin. The signature
+    * columns that `sign` returns (it gets the pinned members, for driver
+    * state such as seeds) are folded once per representative and pinned
+    * once; re-read content feeds them and is then dropped.
+    *
+    * Returns the pinned `members` (id, key, rep), one row per keyed row,
+    * and the pinned `reps` (rep, key, carried columns..., signatures...). */
+  private[graft] def contentReps(keyed: DataFrame, id: String, key: String,
+      content: Option[DataFrame] = None)(
+      sign: DataFrame => Seq[Column]): (DataFrame, DataFrame) = {
+    val pinned = keyed.withColumn("rep", when(col(key).isNotNull,
+        min(id).over(org.apache.spark.sql.expressions.Window.partitionBy(key))))
+      .localCheckpoint()
+    val carried = keyed.columns.filterNot(Set(id, key)).toSeq
+    val kept = Seq("rep", key) ++ (if (content.isEmpty) carried else Nil)
+    val repRows = pinned.filter(col(id) === col("rep"))
+    val withContent = content.fold(repRows)(c =>
+      repRows.select("rep", key).join(c.withColumnRenamed(id, "rep"), "rep"))
+    val reps = withContent.select(kept.map(col) ++ sign(pinned): _*)
+      .localCheckpoint()
+    (pinned.select(id, key, "rep"), reps)
+  }
+
+  /** The full pair set behind representative pairs: `repPairs`
+    * (r1, r2, measures...) expands to every member pair across the two
+    * groups, and every pair inside one group takes its representative's
+    * row of `within` (rep, measures...). Returns (`lo`, `hi`,
+    * measures...) with `lo` < `hi` the member ids. Keyed on `rep`, which
+    * is 1:1 with the content key. */
+  private[graft] def expandRepPairs(members: DataFrame, id: String,
+      repPairs: DataFrame, within: DataFrame,
+      lo: String, hi: String): DataFrame = {
+    val measures = repPairs.columns.filterNot(Set("r1", "r2")).toSeq.map(col)
+    def side(r: String, m: String) =
+      members.select(col("rep").as(r), col(id).as(m))
+    val cross = repPairs.join(side("r1", "__m1"), "r1")
+      .join(side("r2", "__m2"), "r2")
+      .select(least(col("__m1"), col("__m2")).as(lo) +:
+        greatest(col("__m1"), col("__m2")).as(hi) +: measures: _*)
+    val inGroup = side("rep", lo).join(side("rep", hi), "rep")
+      .filter(col(lo) < col(hi))
+      .join(within, "rep")
+      .select(col(lo) +: col(hi) +: measures: _*)
+    cross.unionByName(inGroup)
+  }
+
   // --- DuckDB oracle SQL fragments mirroring the helpers above ---
   def DSUM(e: String): String =
     s"CAST(sum(CAST(($e) AS DECIMAL(30,6))) AS DOUBLE)"
@@ -366,4 +424,20 @@ object Q {
     s"cast(conv(substring(md5($sparkExpr), 1, 15), 16, 10) as bigint)"
   def md5LaneDuck(duckExpr: String): String =
     s"(('0x' || substr(md5($duckExpr), 1, 15))::BIGINT)"
+
+  // Native codegen'd dot/norm (round 14): the same sequential fold as
+  // aggregate(zip_with(a, b, x*y), 0.0, acc+v) (acc += a[i]*b[i], one
+  // generated loop — the HOF interprets ~2·d closures per row), so every
+  // cosine and the DuckDB oracles are bit-unchanged. norm2 = sqrt(dot(a,
+  // a)) is the exact Σx² fold. ASSUMES non-null elements and equal
+  // lengths (true of this corpus's fixed-dim embeddings, and what the
+  // oracle's list_inner_product assumes too): the kernel reads a null
+  // slot as 0.0 and THROWS on a length mismatch, where the HOF
+  // null-propagated / null-padded.
+  def dot(a: Column, b: Column): Column =
+    org.apache.spark.sql.graftcol.NativeColumn.column(
+      graft.functions.InnerProduct(
+        org.apache.spark.sql.graftcol.NativeColumn.expression(a),
+        org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
+  def norm2(a: Column): Column = sqrt(dot(a, a))
 }

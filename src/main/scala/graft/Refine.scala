@@ -47,22 +47,6 @@ import Q._
   */
 object Refine {
 
-  // Native codegen'd dot/norm (round 14): the HOF fold
-  // aggregate(zip_with(a, b, x*y), 0.0, acc+v) interprets ~2·d closures
-  // per pair; InnerProduct runs the identical sequential accumulation in
-  // one generated loop (acc += a[i]*b[i]), so every cosine and the DuckDB
-  // oracles are bit-unchanged. norm2 = sqrt(dot(a, a)) reproduces the
-  // Σx² fold exactly. ASSUMES non-null elements and equal lengths (true
-  // of this corpus's fixed-dim embeddings): the kernel reads a null slot
-  // as 0.0 and THROWS on a length mismatch, where the HOF
-  // null-propagated / null-padded.
-  private def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftcol.NativeColumn.column(
-      graft.functions.InnerProduct(
-        org.apache.spark.sql.graftcol.NativeColumn.expression(a),
-        org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
-  private def norm2(a: Column): Column = sqrt(dot(a, a))
-
   // ---------- semantic deduplication (SemDeDup) ----------
 
   private val SemK = 16
@@ -88,76 +72,70 @@ object Refine {
     * (cos 1.0 outranks any cross pair), and each remaining vector keeps
     * the highest-cosine lower-id neighbor (ties to the lowest id). */
   def dedupSemantic(s: SparkSession, d: String): DataFrame = {
-    val vecs = t(s, d, "embeddings")
-      .select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("v"))
-      .localCheckpoint() // read for groups, seeds, and member expansion
-    val members = vecs.groupBy("v").agg(min("vec_id").as("rep"))
-      .join(vecs, "v") // (v, rep, vec_id): every member knows its rep
-      .select(col("vec_id"), col("rep"))
-      .localCheckpoint()
-    val reps = vecs.join(members.filter(col("vec_id") === col("rep"))
-      .select(col("vec_id")), "vec_id")
-      .select(col("vec_id").as("rep"), col("v"))
-      .localCheckpoint()
-    // seed centroids as DRIVER state (round 15, the emb_outliers /
-    // emb_silhouette posture): the K lowest member ids collect to K×d
-    // doubles and assignment is ONE map pass through the
-    // DecimalSqDevArgmin kernel, which folds each rep against each seed
-    // exactly once (replaying the posexplode join's Σ cast((x−cx)² as
-    // decimal(38,12)) term for term) and replays the old rank-1
-    // window's (dist ASC NULLS FIRST, cid ASC) order. The d×N explode,
-    // the dim-keyed broadcast join, the (rep, cid) keyed reduce, and
-    // the window are ALL gone. Two probed-and-rejected shapes are
-    // recorded in the kernel's scaladoc and here: min(struct(dist, cid))
-    // falls to SortAggregate (variable-length decimal buffer — 2.04 s
-    // window vs 2.70 s min-struct at 10×), and per-seed distance
-    // columns + a when-chain argmin triple the per-row fold count under
-    // CollapseProject (a multi-minute blowup at 10×).
-    val seedRows: Array[(Long, Array[Double])] =
-      vecs.orderBy("vec_id").limit(SemK)
-        .select(col("vec_id"), col("v")).collect()
-        // null elements extract as NaN, not an unboxing NPE: the kernel
-        // skips NaN terms exactly as the dim-join skipped null dims
-        .map(r => (r.getLong(0),
-          Option(r.getSeq[java.lang.Double](1)).map(
-            _.map(x => if (x == null) Double.NaN else x.doubleValue).toArray)
-            .getOrElse(Array.empty[Double])))
-        // a null/empty seed embedding joined no dimension rows in the
-        // explode formulation, so its cid never appeared in the rank —
-        // drop it here too (a zero-length seed's DecimalSqDevSum is null
-        // for EVERY rep, and null distance ranks FIRST in the argmin, so
-        // keeping it would silently collapse all clusters onto it)
-        .filter(_._2.nonEmpty)
-        .sortBy(_._1)
-    // cid + nrm in ONE materialized projection over the checkpointed reps
-    // (round 18): the r17 shape computed them as two SEPARATE projections
-    // of the same 1:1 row set and glued them back with a rep-keyed join,
-    // and every downstream consumer (both pair-join sides, the final cid
-    // lookup) re-derived the kernels wherever the optimizer re-inlined
-    // them (inferred isnotnull(cid) filters, AQE broadcast subtrees). The
-    // localCheckpoint pins the kernels to exactly ONE fold per rep and
-    // hands AQE exact sizes, so the pair join and the final lookup both
-    // broadcast. A/B story (alternating min-of-3/4, same session) is
-    // PROTOCOL-SPLIT and the shipped shape is chosen by the protocol that
-    // grades this op (PipeBench: AQE on, shuffle=32):
-    //   pipe protocol:   fused+checkpoint 2.209 BEATS r17 2.859 (all 4
-    //                    adjacent pairs) BEATS plain-fused 3.440 (the
-    //                    un-pinned projection re-folds the argmin in the
-    //                    final join's fresh broadcast subtree under AQE)
-    //   driver protocol (AQE off, shuffle=4, not an artifact for this
-    //                    op): plain-fused 1.845 beats r17 2.120 beats
-    //                    fused+checkpoint 2.511 (no AQE broadcasts to
-    //                    buy, so the eager barrier is pure cost)
-    // Norms fold ONCE per rep; nrm1·nrm2 is bit-identical to folding both
-    // norms inside the pair row, so the oracle's per-pair formula still
-    // hash-matches.
-    val rv = reps.select(col("rep"), col("v"), norm2(col("v")).as("nrm"),
+    // the vector is its own content key; the seeds are read off the
+    // pinned members, and the signatures below fold once per rep
+    val (members, rv) = contentReps(t(s, d, "embeddings")
+        .select(col("vec_id"),
+          transform(col("embedding"), _.cast("double")).as("v")),
+      "vec_id", "v") { vecs =>
+      // seed centroids as DRIVER state (round 15, the emb_outliers /
+      // emb_silhouette posture): the K lowest member ids collect to K×d
+      // doubles and assignment is ONE map pass through the
+      // DecimalSqDevArgmin kernel, which folds each rep against each seed
+      // exactly once (replaying the posexplode join's Σ cast((x−cx)² as
+      // decimal(38,12)) term for term) and replays the old rank-1
+      // window's (dist ASC NULLS FIRST, cid ASC) order. The d×N explode,
+      // the dim-keyed broadcast join, the (rep, cid) keyed reduce, and
+      // the window are ALL gone. Two probed-and-rejected shapes are
+      // recorded in the kernel's scaladoc and here: min(struct(dist, cid))
+      // falls to SortAggregate (variable-length decimal buffer — 2.04 s
+      // window vs 2.70 s min-struct at 10×), and per-seed distance
+      // columns + a when-chain argmin triple the per-row fold count under
+      // CollapseProject (a multi-minute blowup at 10×).
+      val seedRows: Array[(Long, Array[Double])] =
+        vecs.orderBy("vec_id").limit(SemK)
+          .select(col("vec_id"), col("v")).collect()
+          // null elements extract as NaN, not an unboxing NPE: the kernel
+          // skips NaN terms exactly as the dim-join skipped null dims
+          .map(r => (r.getLong(0),
+            Option(r.getSeq[java.lang.Double](1)).map(
+              _.map(x => if (x == null) Double.NaN else x.doubleValue).toArray)
+              .getOrElse(Array.empty[Double])))
+          // a null/empty seed embedding joined no dimension rows in the
+          // explode formulation, so its cid never appeared in the rank —
+          // drop it here too (a zero-length seed's DecimalSqDevSum is null
+          // for EVERY rep, and null distance ranks FIRST in the argmin, so
+          // keeping it would silently collapse all clusters onto it)
+          .filter(_._2.nonEmpty)
+          .sortBy(_._1)
+      // cid + nrm in ONE materialized projection over the reps
+      // (round 18): the r17 shape computed them as two SEPARATE projections
+      // of the same 1:1 row set and glued them back with a rep-keyed join,
+      // and every downstream consumer (both pair-join sides, the final cid
+      // lookup) re-derived the kernels wherever the optimizer re-inlined
+      // them (inferred isnotnull(cid) filters, AQE broadcast subtrees). The
+      // localCheckpoint pins the kernels to exactly ONE fold per rep and
+      // hands AQE exact sizes, so the pair join and the final lookup both
+      // broadcast. A/B story (alternating min-of-3/4, same session) is
+      // PROTOCOL-SPLIT and the shipped shape is chosen by the protocol that
+      // grades this op (PipeBench: AQE on, shuffle=32):
+      //   pipe protocol:   fused+checkpoint 2.209 BEATS r17 2.859 (all 4
+      //                    adjacent pairs) BEATS plain-fused 3.440 (the
+      //                    un-pinned projection re-folds the argmin in the
+      //                    final join's fresh broadcast subtree under AQE)
+      //   driver protocol (AQE off, shuffle=4, not an artifact for this
+      //                    op): plain-fused 1.845 beats r17 2.120 beats
+      //                    fused+checkpoint 2.511 (no AQE broadcasts to
+      //                    buy, so the eager barrier is pure cost)
+      // Norms fold ONCE per rep; nrm1·nrm2 is bit-identical to folding both
+      // norms inside the pair row, so the oracle's per-pair formula still
+      // hash-matches.
+      Seq(norm2(col("v")).as("nrm"),
         org.apache.spark.sql.graftcol.NativeColumn.column(
           graft.functions.DecimalSqDevArgmin(
             org.apache.spark.sql.graftcol.NativeColumn.expression(col("v")),
             seedRows.map(_._2), seedRows.map(_._1), 12)).as("cid"))
-      .localCheckpoint()
+    }
     val pairs = rv.as("a").join(rv.as("b"),
         col("a.cid") === col("b.cid") && col("a.rep") < col("b.rep"))
       // try_divide: a zero vector's norm product is 0, and ANSI mode

@@ -75,10 +75,7 @@ object Scale {
       // posexplode twin is pinned in LearnSpec): the d× row expansion
       // and its d hash probes per row are gone.
       val st = vecs
-        .withColumn("dv", org.apache.spark.sql.graftcol.NativeColumn.column(
-          graft.functions.InnerProduct(
-            org.apache.spark.sql.graftcol.NativeColumn.expression(col("v")),
-            org.apache.spark.sql.graftcol.NativeColumn.expression(expr(vArr)))))
+        .withColumn("dv", dot(col("v"), expr(vArr)))
         .agg(graft.functions.VectorDecimalStats.vector_decimal_stats(
           col("v"), col("dv"), 38, 12).as("st"))
         .head().getStruct(0)

@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   * suppkey) by the same offset in every table that carries it, so join
   * cardinalities scale linearly and no artificial hot keys appear.
   * Fixed-cardinality dims (nation, region) are not replicated, as in real
-  * TPC-H scaling. Non-TPC-H tables are copied once (the bench does not
-  * read them). The session is [[Harness.verify]]; the written layout is
+  * TPC-H scaling, and `events` is copied once. `documents` and
+  * `embeddings` are replicated with their ids shifted and their content
+  * duplicated, so the dedup and ANN operators can be stress-run at the
+  * scaled corpus size. The session is [[Harness.verify]]; the written layout is
   * set by explicit repartitions, not by its shuffle width. Usage:
   *   runMain graft.ScaleBench [factor] [srcDir] [outDir]
   * then run graft.Bench with SPARK_GRAFT_SF_DIR=outDir.

@@ -267,7 +267,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("banded ngram-jaccard equals the brute-force pair set") {
     val banded = Pipeline.dedupNgramJaccard(spark, sf).collect().map(_.toString).toSeq
-    val brute = Pipeline.dedupNgramJaccardBrute(spark, sf).collect().map(_.toString).toSeq
+    val brute = DedupBrute.dedupNgramJaccard(spark, sf).collect().map(_.toString).toSeq
     assert(banded == brute)
   }
 
@@ -285,7 +285,7 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_emb").toString
     spark.createDataFrame(rows).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val brute = Pipeline.dedupEmbeddingBrute(spark, dir).collect().map(_.toString).toSeq
+    val brute = DedupBrute.dedupEmbedding(spark, dir).collect().map(_.toString).toSeq
     val banded = Pipeline.dedupEmbedding(spark, dir).collect().map(_.toString).toSeq
     assert(brute.nonEmpty, "synthetic corpus produced no near-dup pairs")
     assert(banded == brute)
@@ -311,7 +311,7 @@ class PipelineSpec extends AnyFunSuite {
     spark.createDataFrame(rows).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val banded = Pipeline.dedupEmbedding(spark, dir).collect()
-    val brute = Pipeline.dedupEmbeddingBrute(spark, dir).collect()
+    val brute = DedupBrute.dedupEmbedding(spark, dir).collect()
     assert(banded.map(_.toString).toSeq == brute.map(_.toString).toSeq)
     assert(banded.nonEmpty, "the genuine near-dups must still pair")
     assert(banded.forall(r => !r.getAs[Double]("cos_sim").isNaN))
@@ -633,7 +633,7 @@ class TrainingOpsSpec extends AnyFunSuite {
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getLong(1), r.getLong(2))
     val hashed = Pipeline.dedupSubstring(spark, sf).collect().map(key).toSeq
-    val brute = Pipeline.dedupSubstringBruteSpans(spark, sf).collect()
+    val brute = DedupBrute.dedupSubstringSpans(spark, sf).collect()
       .map(key).toSeq
     assert(hashed == brute,
       "md5-lane gram keys changed the duplicated-span stats (collision?)")
