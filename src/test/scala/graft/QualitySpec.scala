@@ -224,11 +224,6 @@ class QualitySpec extends AnyFunSuite {
       "ntileBucketCol" -> 5))
   }
 
-  /** The eight registry ops built on the content-representative scaffold. */
-  private val repFamily = Seq("dedup_ngram_jaccard", "dedup_minhash_lsh",
-    "dedup_groups", "dedup_keep_canonical", "dedup_simhash",
-    "dedup_embedding", "text_containment", "dedup_semantic")
-
   test("each content-representative dedup op starts a fixed number of jobs") {
     // the election and signature pins (plus dedup_groups' pair pin and
     // count, the embedding width probe and dedup_semantic's seed collect)
@@ -241,8 +236,10 @@ class QualitySpec extends AnyFunSuite {
     // stage of its own (the election rides the member pin)
     val s = spark.newSession()
     Q.registerAll(s, sf)
-    val counts = repFamily.map { n =>
-      n -> jobsDuring(s)(SparkEntry.queries(n)(s, sf)).size }.toMap
+    val counts = Seq("dedup_ngram_jaccard", "dedup_minhash_lsh",
+        "dedup_groups", "dedup_keep_canonical", "dedup_simhash",
+        "dedup_embedding", "text_containment", "dedup_semantic")
+      .map(n => n -> jobsDuring(s)(SparkEntry.queries(n)(s, sf)).size).toMap
     assert(counts == Map("dedup_ngram_jaccard" -> 3, "dedup_minhash_lsh" -> 4,
       "dedup_groups" -> 11, "dedup_keep_canonical" -> 11, "dedup_simhash" -> 4,
       "dedup_embedding" -> 4, "text_containment" -> 4, "dedup_semantic" -> 4))
