@@ -226,8 +226,9 @@ class QualitySpec extends AnyFunSuite {
 
   test("each content-representative dedup op starts a fixed number of jobs") {
     // the election and signature pins (plus dedup_groups' pair pin and
-    // count, the embedding width probe and dedup_semantic's seed collect)
-    // that one build runs; a fresh session with the tables registered
+    // count, the embedding width probe and dedup_semantic's seed collect),
+    // and graph_components' edge pin, count and collect, that one build
+    // runs; a fresh session with the tables registered
     // keeps schema inference out of the count. Counted before the family
     // shared Q.contentReps: equal since, except dedup_embedding (7) and
     // dedup_semantic (8), whose separate member pin, and for semantic
@@ -238,11 +239,13 @@ class QualitySpec extends AnyFunSuite {
     Q.registerAll(s, sf)
     val counts = Seq("dedup_ngram_jaccard", "dedup_minhash_lsh",
         "dedup_groups", "dedup_keep_canonical", "dedup_simhash",
-        "dedup_embedding", "text_containment", "dedup_semantic")
+        "dedup_embedding", "text_containment", "dedup_semantic",
+        "graph_components")
       .map(n => n -> jobsDuring(s)(SparkEntry.queries(n)(s, sf)).size).toMap
     assert(counts == Map("dedup_ngram_jaccard" -> 3, "dedup_minhash_lsh" -> 4,
       "dedup_groups" -> 11, "dedup_keep_canonical" -> 11, "dedup_simhash" -> 4,
-      "dedup_embedding" -> 4, "text_containment" -> 4, "dedup_semantic" -> 4))
+      "dedup_embedding" -> 4, "text_containment" -> 4, "dedup_semantic" -> 4,
+      "graph_components" -> 7))
   }
 
   test("the content-representative family is invariant to the shuffle width") {
