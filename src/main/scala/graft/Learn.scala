@@ -16,9 +16,9 @@ import Q._
   * Scale design notes (the 100 TB shapes, not just the sf0.01 ones):
   *  - `graph_components` links every bucket member to the bucket MINIMUM
   *    instead of emitting all in-bucket pairs (the "star" reduction —
-  *    O(bucket) edges, not O(bucket²)) and then runs min-label
-  *    propagation to a driver-checked fixpoint; every iteration is one
-  *    keyed shuffle, never a global structure.
+  *    O(bucket) edges, not O(bucket²)) and then solves components
+  *    with [[Q.components]]: a driver union-find under its edge cap, a
+  *    distributed fixpoint of keyed shuffles over it.
   *  - `emb_kmeans` is the canonical distributed training loop: centroids
   *    are k×d driver state constant-folded into each assignment's plan,
   *    per-vector distances are map-side folds, the update is one keyed
@@ -41,27 +41,13 @@ object Learn {
   /** Resolve near-duplicate documents into transitive groups: bucket by
     * two fingerprint families (full normalized text + 60-char prefix —
     * a doc can chain groups by matching one doc exactly and another by
-    * prefix), emit star edges member→bucket-min, then min-label
-    * propagation to fixpoint. Each iteration pairs the neighbor-min step
-    * with a pointer-jumping shortcut (label ← label's label — every label
-    * value is itself a node id, so the self-join is total): the
-    * propagation front doubles per round, so convergence is O(log
-    * diameter), not O(diameter), and long alternating fingerprint chains
-    * cannot outrun the 25-iteration cap. Non-convergence within the cap
-    * fails loudly (`require`) rather than emitting unconverged labels;
-    * each superseded label checkpoint is unpersisted once the new one is
-    * materialized, so executor storage holds ≤2 label snapshots at any
-    * time. Emits one row per multi-document component. The same algorithm
-    * resolves MinHash-band buckets at production scale; the fingerprint
-    * families keep the oracle tractable.
-    *
-    * Round-16 adaptive solve (cf. [[Pipeline.dedupGroups]]): the pinned
-    * star-edge list is COUNTed (no driver memory), and under
-    * [[Pipeline.DedupFixpointDriverCap]] components solve with the
-    * shared union-by-min-root union-find in one collect; over the cap
-    * nothing is collected and the distributed fixpoint below runs
-    * against the same pinned table. ComponentPathsSpec pins the two
-    * paths equal. */
+    * prefix), emit star edges member→bucket-min, and solve their
+    * connected components with [[Q.components]]. Long alternating
+    * fingerprint chains are the deep case; the core's distributed path
+    * converges in O(log diameter) rounds. Emits one row per
+    * multi-document component. The same algorithm resolves MinHash-band
+    * buckets at production scale; the fingerprint families keep the
+    * oracle tractable. */
   def graphComponents(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     val norm = expr(normExpr)
@@ -70,103 +56,13 @@ object Learn {
           concat(lit("f#"), md5(norm.cast("binary"))),
           concat(lit("p#"), md5(substring(norm, 1, 60).cast("binary"))))).as("k"))
     val roots = buckets.groupBy("k").agg(min("doc_id").as("root"))
-    val (edges, edgeIds) = pinnedIds(s) {
-      buckets.join(roots, "k")
+    Q.components(s, buckets.join(roots, "k")
         .filter(col("doc_id") =!= col("root"))
-        .select(col("doc_id").as("u"), col("root").as("v")).distinct()
-        .localCheckpoint()
-    }
-    // adaptive small-graph solve: count the pinned star-edge list (no
-    // driver memory), collect + union-find only when it fits the cap
-    val lbl =
-      if (edges.count() <= Pipeline.DedupFixpointDriverCap) {
-        // typed collect: no Row layer on the at-cap driver transient
-        // (cf. DedupFixpointDriverCap's memory math)
-        implicit val enc = org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong)
-        s.createDataFrame(Pipeline.repComponentsDriver(
-            edges.as[(Long, Long)].collect()))
-          .toDF("node", "c")
-      } else componentLabelsDistributed(s, edges)
-    release(s, edgeIds) // result depends only on lbl / its checkpoint
-    lbl.groupBy(col("c").as("comp_id"))
+        .select(col("doc_id"), col("root")).distinct())
+      .groupBy(col("label").as("comp_id"))
       .agg(count(lit(1)).as("n_docs"),
         min("node").as("min_doc"), max("node").as("max_doc"))
       .orderBy(col("n_docs").desc, col("comp_id"))
-  }
-
-  /** Track which RDDs `body` pins (cache/localCheckpoint) so iterative
-    * ops can release superseded snapshots explicitly. Shared with
-    * [[Pipeline.dedupGroups]]'s pinned pair table (round 17). */
-  private[graft] def pinnedIds(s: SparkSession)(
-      body: => DataFrame): (DataFrame, Set[Int]) = {
-    val pre = s.sparkContext.getPersistentRDDs.keySet.toSet
-    val df = body
-    (df, s.sparkContext.getPersistentRDDs.keySet.toSet -- pre)
-  }
-  private[graft] def release(s: SparkSession, ids: Set[Int]): Unit = ids.foreach(id =>
-    s.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-
-  /** Distributed min-label fixpoint over a star-edge list (u, v) — the
-    * over-cap path of [[graphComponents]]; one (node, c) row per edge
-    * endpoint with c = its component's minimum node id. LearnSpec pins
-    * it equal to [[Pipeline.repComponentsDriver]]. */
-  private[graft] def componentLabelsDistributed(
-      s: SparkSession, edges: DataFrame): DataFrame = {
-    val (adj, adjIds) = pinnedIds(s) {
-      edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-        .localCheckpoint()
-    }
-    var (lbl, lblIds) = pinnedIds(s) {
-      adj.select(col("u").as("node"), col("u").as("c")).distinct()
-        .localCheckpoint()
-    }
-    // Σc convergence (round 15, the dedupGroups argument): every node's
-    // label is non-increasing under both the neighbor-min and the
-    // pointer jump, so Σc strictly decreases at every non-converged
-    // iteration and stalls exactly at the fixpoint — the per-iteration
-    // join of next against the superseded snapshot (one extra shuffle
-    // per round) is gone; the convergence probe is a d-bounded agg over
-    // the already-checkpointed labels. Summed as decimal(38,0), not long:
-    // a long sum overflows at node-id×count scale (ANSI throw / non-ANSI
-    // wraparound would make "sum stalled ⇒ fixpoint" merely probabilistic);
-    // the decimal sum keeps the monotone-stall argument exact at any scale.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("c").cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))).head().getDecimal(0)
-    var lastSum = labelSum(lbl)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 25) {
-      val nbr = adj.join(lbl.withColumnRenamed("node", "u"), "u")
-        .groupBy(col("v").as("node")).agg(min("c").as("nc"))
-      // pinned because the shortcut below reads it twice (self-join)
-      val (prop, propIds) = pinnedIds(s) {
-        lbl.join(nbr, Seq("node"), "left")
-          .select(col("node"), least(col("c"), coalesce(col("nc"), col("c"))).as("c"))
-          .localCheckpoint()
-      }
-      // pointer jumping: follow the label one hop (c ← label(c)) so label
-      // information travels 2^iter hops after iter rounds
-      val (next, nextIds) = pinnedIds(s) {
-        prop.join(
-            prop.select(col("node").as("c"), col("c").as("cc")), Seq("c"), "left")
-          .select(col("node"), least(col("c"), coalesce(col("cc"), col("c"))).as("c"))
-          .localCheckpoint()
-      }
-      val sum = labelSum(next)
-      release(s, propIds) // intermediate: `next` is materialized past it
-      release(s, lblIds) // superseded snapshot: free it once `next` is pinned
-      lbl = next; lblIds = nextIds
-      converged = sum.compareTo(lastSum) == 0
-      lastSum = sum
-      iter += 1
-    }
-    require(converged,
-      s"component label propagation did not converge in $iter iterations")
-    release(s, adjIds) // result depends only on lbl's checkpoint
-    lbl
   }
   val graphComponentsSql: String =
     """WITH RECURSIVE

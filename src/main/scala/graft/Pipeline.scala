@@ -410,7 +410,12 @@ object Pipeline {
   private[graft] val NumHashes = graft.functions.MinHashSignature.NumHashes
   private[graft] val BandSize = graft.functions.MinHashSignature.BandSize
 
-  /** The hyperplane coefficient matrix used by the embedding-LSH family
+  /** The md5-seeded hyperplane coefficients as driver values — consumed
+    * by the [[graft.functions.HyperplaneSigs]] kernel directly and
+    * rendered to the plan/oracle literal by [[planeMatrix]], so the
+    * kernel and the SQL twin read the exact same doubles.
+    *
+    * The hyperplane coefficient matrix used by the embedding-LSH family
     * is a CONSTANT — it depends only on (plane, dim), not on the row —
     * so derive it ONCE driver-side (identical md5-lane arithmetic to the
     * SQL the oracle still runs) and embed it as a nested array literal
@@ -419,10 +424,6 @@ object Pipeline {
     * per operator — measured 2–3× of each operator's runtime). Driver
     * cost is 64·d hashes; the literal is 64·d doubles — the same bounded
     * bookkeeping as the IVF centroid literal. */
-  /** The md5-seeded hyperplane coefficients as driver values — consumed
-    * by the [[graft.functions.HyperplaneSigs]] kernel directly and
-    * rendered to the plan/oracle literal by [[planeMatrix]], so the
-    * kernel and the SQL twin read the exact same doubles. */
   private[graft] def planeValues(nPlanes: Int, d: Int): Array[Array[Double]] = {
     val mdig = java.security.MessageDigest.getInstance("MD5")
     def lane(sx: String): Long = {
@@ -454,8 +455,9 @@ object Pipeline {
     * alternative — [[NumHashes]] independent seeded md5s per shingle — is
     * ~16× the hashing work and dominated the whole dedup family's runtime
     * at the 10× corpus. The fold keeps one md5 evaluation per shingle:
-    * each (a,b) struct updates all [[NumHashes]] running minima. */
-  /** Round-11: the signature now evaluates through the native codegen'd
+    * each (a,b) struct updates all [[NumHashes]] running minima.
+    *
+    * Round-11: the signature now evaluates through the native codegen'd
     * kernel ([[graft.functions.MinHashSignature]]) — one generated loop
     * per document instead of per-shingle interpreter re-entry for the
     * substring/md5/conv/array_min chain. Same md5 halves, same
@@ -626,54 +628,20 @@ object Pipeline {
     * cardinality grows as duplicate-group-size² even when the candidate
     * join doesn't (4.2M simhash pairs at the 10× stress corpus), while the
     * keep/remove decision per doc grows linearly. This operator collapses
-    * the verified MinHash candidate pairs into connected components via
-    * iterative min-label propagation — the same handle-based distributed
-    * fixpoint as [[Advanced.recReachability]]: every step is an equi-join
-    * + keyed aggregation (no driver-side graph), one job per iteration,
-    * superseded rounds explicitly unpersisted. Converges in O(component
-    * diameter) rounds; near-dup groups are dense (band collisions make
-    * them clique-like), so a handful of rounds suffice even at scale.
+    * the verified MinHash candidate pairs into connected components with
+    * [[Q.components]], over the representative graph rather than the full
+    * pair set: identical-text groups are cliques that share their rep's
+    * connections, so components over rep pairs expand exactly to
+    * components over all pairs, and every rep is its group's min doc id,
+    * so a component's min rep label is its min doc id. At a replicated
+    * corpus (group size g) that shrinks the solve's input by ~g².
     * Output: one row per doc appearing in any candidate pair, with
     * `keep_id` = min doc id of its component (keep iff doc_id = keep_id).
     * Oracle: DuckDB recursive CTE over the identical pair CTEs. */
   def dedupGroups(s: SparkSession, d: String): DataFrame = {
-    // Round-11: propagate over the REPRESENTATIVE graph, not the
-    // reconstructed full pair set. Identical-text groups are cliques
-    // that share their rep's connections, so components over rep pairs
-    // expand exactly to components over all pairs — and every rep IS
-    // its group's min doc id, so the component's min rep label equals
-    // the min doc id the full-graph fixpoint would compute. At a
-    // replicated corpus (group size g) this shrinks the fixpoint input
-    // by ~g² while the output stays bit-identical.
-    //
-    // Round-16 adaptive solve (the broadcast-threshold posture): pin the
-    // pair table once, COUNT it (no driver memory), and when the whole
-    // graph fits under [[DedupFixpointDriverCap]] solve components with
-    // a driver union-find instead of paying the distributed fixpoint's
-    // per-round stage launches (measured at the 10× corpus: 242 edges /
-    // 470 nodes, yet ~1.2 s of scheduler floor across the init + 2
-    // convergence rounds). Over the cap the same distributed min-label
-    // fixpoint as before runs against the already-pinned table —
-    // components of a 100 TB pair graph never route through the driver,
-    // and the expensive candidate-pair verify is never computed twice.
-    // DedupComponentPathsSpec pins the two paths row-equal.
     val (members, repPairs) = minhashScaffold(s, d)
-    val (p, pIds) = Learn.pinnedIds(s) {
-      repPairs.select(col("r1"), col("r2")).localCheckpoint()
-    }
-    val labelsRep =
-      if (p.count() <= DedupFixpointDriverCap) {
-        implicit val enc = org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong)
-        s.createDataFrame(repComponentsDriver(p.as[(Long, Long)].collect()))
-          .toDF("rep", "label")
-      } else repComponentsDistributed(s, p)
-    // p's checkpointed RDD is dead on both paths here (driver: collected;
-    // distributed: labelsRep is itself checkpointed past it) — release it
-    // like every other pinned intermediate, one pinned RDD per call leaked
-    // otherwise (round-17 ADVICE).
-    Learn.release(s, pIds)
+    val labelsRep = Q.components(s, repPairs.select(col("r1"), col("r2")))
+      .withColumnRenamed("node", "rep")
     // Expand rep components to documents. A doc is in the full pair set
     // iff its rep pairs with another rep OR its identical-text group has
     // ≥ 2 members (within-group pairs); its component label is its rep's
@@ -686,169 +654,6 @@ object Pipeline {
       .select(col("doc_id"),
         coalesce(col("label"), col("rep")).as("keep_id"))
       .orderBy("doc_id")
-  }
-  /** Driver-solve ceiling for [[dedupGroups]]' rep-pair graph: 2²¹ edges.
-    * Honest driver-memory math at the cap (round 17 — collected as a
-    * typed `(Long, Long)` Dataset, solved in a primitive open-addressing
-    * map): the collect materializes 2²¹ Tuple2 cells (~32–130 MB
-    * depending on boxing; no Row layer, no schema refs), and the
-    * union-find holds at most 2·2²¹ ≈ 4.2M entries in two parallel
-    * `long[]` arrays (2²³ slots at the cap, ≤ 0.5 load) — ~143 MB flat,
-    * no per-entry objects.
-    * Transient peak ≲ 300 MB — the class of Spark's own small-side
-    * broadcast adaptivity, paid only AFTER an exact count() has shown
-    * the table fits, and a future cap bump scales it linearly (a 2³⁰
-    * cap would need ~32 GB: revisit the collect before raising it that
-    * far). Over the cap, the distributed fixpoint runs and nothing is
-    * collected. */
-  private[graft] val DedupFixpointDriverCap: Long = 1L << 21
-
-  /** Driver union-find over rep pairs, union-by-min-root so every tree's
-    * root IS its component's minimum rep id — exactly the label the
-    * distributed min-propagation fixpoint converges to. Path-compressed;
-    * O(edges · α). Returns one (rep, min-label) row per node appearing
-    * in any pair — the same node set as `edges.select(src).distinct`
-    * over the doubled edge list. */
-  private[graft] def repComponentsDriver(
-      pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    // primitive open-addressing parent map (round 17): two long[] at 0.5
-    // max load instead of ~4M boxed java.util.HashMap nodes — the at-cap
-    // driver peak drops from hundreds of MB of Long/Node objects to two
-    // flat arrays (see DedupFixpointDriverCap's math)
-    val parent = new LongLongOpenMap(math.max(16, pairs.length * 2))
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent.put(c, r); c = n }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      if (!parent.contains(a)) parent.put(a, a)
-      if (!parent.contains(b)) parent.put(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        // attach the larger root under the smaller: roots stay minima
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-      }
-    }
-    parent.keysIterator.map(x => (x, find(x))).toSeq
-  }
-
-  /** Minimal primitive long→long open-addressing map (linear probing,
-    * power-of-two capacity, grow at 0.7 load) for the driver union-find:
-    * two flat `long[]` plus a `boolean[]` occupancy lane — no per-entry
-    * node or boxing. Only the operations [[repComponentsDriver]] needs. */
-  private[graft] final class LongLongOpenMap(expected: Int) {
-    // `expected * 2 - 1` overflows Int at expected ≥ 2^30, which would
-    // yield a negative/zero capacity and corrupt the probe mask. Today's
-    // DedupFixpointDriverCap (2^21 edges → expected ≤ 2^22) is nowhere
-    // near, but the cap's scaladoc contemplates future bumps — fail loudly
-    // here instead of silently corrupting if one ever crosses 2^29.
-    require(expected >= 0 && expected <= (1 << 29),
-      s"LongLongOpenMap expected size $expected exceeds 2^29 (capacity math overflows Int)")
-    private var cap = java.lang.Integer.highestOneBit(
-      math.max(16, expected) * 2 - 1) << 1
-    private var keys = new Array[Long](cap)
-    private var vals = new Array[Long](cap)
-    private var used = new Array[Boolean](cap)
-    private var n = 0
-    private def slot(k: Long): Int = {
-      var h = k * -7046029254386353131L // splitmix64 finalizer multiplier
-      h ^= (h >>> 32)
-      var i = h.toInt & (cap - 1)
-      while (used(i) && keys(i) != k) i = (i + 1) & (cap - 1)
-      i
-    }
-    def contains(k: Long): Boolean = used(slot(k))
-    /** Value for a present key; the union-find only reads keys it has put. */
-    def apply(k: Long): Long = {
-      val i = slot(k)
-      if (!used(i)) throw new NoSuchElementException(s"key $k")
-      vals(i)
-    }
-    def put(k: Long, v: Long): Unit = {
-      val i = slot(k)
-      if (!used(i)) {
-        used(i) = true; keys(i) = k; n += 1
-        if (n.toLong * 10 > cap.toLong * 7) grow()
-      }
-      vals(slot(k)) = v // re-probe: grow() may have moved the slot
-    }
-    private def grow(): Unit = {
-      val (ok, ov, ou) = (keys, vals, used)
-      cap <<= 1
-      keys = new Array[Long](cap); vals = new Array[Long](cap)
-      used = new Array[Boolean](cap)
-      var i = 0
-      while (i < ok.length) {
-        if (ou(i)) { val j = slot(ok(i)); used(j) = true; keys(j) = ok(i); vals(j) = ov(i) }
-        i += 1
-      }
-    }
-    def keysIterator: Iterator[Long] = {
-      val (ks, u) = (keys, used) // no implicit Array→Seq copy
-      (0 until cap).iterator.filter(u(_)).map(ks(_))
-    }
-  }
-
-  /** The distributed min-label fixpoint over the rep-pair graph — the
-    * over-cap path of [[dedupGroups]] (and the shape that ran
-    * unconditionally through round 15). Σlabel strictly decreases until
-    * the fixpoint, so it doubles as the convergence check AND the
-    * per-round materialization action; superseded label checkpoints are
-    * released so executor storage holds ≤2 snapshots. */
-  private[graft] def repComponentsDistributed(
-      s: SparkSession, p: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = p.union(p.select(col("r2"), col("r1")))
-      .toDF("src", "dst").cache()
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-    var labelsRdd = edges.select(col("src")).distinct()
-      .select(col("src").as("doc_id"), col("src").as("label"))
-      .as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    // decimal(38,0), not long (cf. Learn.componentLabelsDistributed): this
-    // is the exclusive path for graphs over the driver cap — exactly the
-    // scale where a long Σlabel overflows (ANSI throw / non-ANSI
-    // wraparound would make "sum stalled ⇒ fixpoint" merely probabilistic)
-    def labelSum(rdd: org.apache.spark.rdd.RDD[(Long, Long)]): java.math.BigDecimal =
-      s.createDataset(rdd).toDF("doc_id", "label")
-        .agg(coalesce(org.apache.spark.sql.functions.sum(
-            col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-          lit(0).cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head().getDecimal(0)
-    var sum = labelSum(labelsRdd)
-    var lastSum: java.math.BigDecimal = null
-    var iter = 0
-    while ((lastSum == null || sum.compareTo(lastSum) != 0) && iter < 50) {
-      lastSum = sum
-      val labels = s.createDataset(labelsRdd).toDF("doc_id", "label")
-      val nbrMin = edges.join(labels, col("dst") === col("doc_id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr"))
-      val nextRdd = labels
-        .join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
-        .select(labels("doc_id"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-        .as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      sum = labelSum(nextRdd)
-      labelsRdd.unpersist(blocking = false)
-      labelsRdd = nextRdd
-      iter += 1
-    }
-    if (lastSum == null || sum.compareTo(lastSum) != 0)
-      throw new IllegalStateException(
-        s"dedup_groups: min-label propagation did not converge in $iter " +
-          "rounds — a component's diameter exceeds the iteration cap; " +
-          "returning partial labels would silently split groups")
-    // Materialize the rep labels (rep-bounded) so the persisted RDD and
-    // edge cache can be released — otherwise one MEMORY_AND_DISK RDD
-    // leaks per call.
-    val labelsRep = s.createDataset(labelsRdd).toDF("rep", "label")
-      .localCheckpoint()
-    labelsRdd.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    labelsRep
   }
 
   val dedupGroupsSql: String =
@@ -2124,9 +1929,11 @@ object Pipeline {
     // trainers use, but restricted to the provably-identical subset so
     // the sequential oracle stays hash-exact.
     val TopK = 64
-    var seqs = t(s, d, "documents")
-      .select(concat(lit("|"), concat_ws("|", expr(wordsExpr)), lit("|")).as("seq"))
-      .localCheckpoint()
+    var (seqs, seqIds) = pinnedIds(s) {
+      t(s, d, "documents")
+        .select(concat(lit("|"), concat_ws("|", expr(wordsExpr)), lit("|")).as("seq"))
+        .localCheckpoint()
+    }
     val merges = Seq.newBuilder[(Long, String, Long)]
     var done = 0
     while (done < Steps) {
@@ -2154,11 +1961,14 @@ object Pipeline {
           val Array(a, b) = pair.split("\\|", 2)
           s"replace($inner, '|$a|$b|', '|$a~$b|')"
         }
-        val old = seqs
-        seqs = seqs.select(expr(fusedSeq).as("seq")).localCheckpoint()
-        old.unpersist()
+        val (next, nextIds) = pinnedIds(s) {
+          seqs.select(expr(fusedSeq).as("seq")).localCheckpoint()
+        }
+        release(s, seqIds)
+        seqs = next; seqIds = nextIds
       }
     }
+    release(s, seqIds) // the merge table is built on the driver
     import s.implicits._
     merges.result().toDF("step", "pair", "pair_count").orderBy("step")
   }
@@ -2977,47 +2787,38 @@ object Pipeline {
     * same size as the 1st. */
   val PrIters = 5
   val PrScale = 1e12
-  def graphPagerank(s: SparkSession, d: String): DataFrame =
-    graphPagerankImpl(s, d, checkpoint = true)
-  /** checkpoint=false keeps the full multi-iteration lineage visible —
-    * used by the plan-audit spec to assert the broadcast-join shape that
-    * `localCheckpoint` otherwise hides behind an RDD scan. */
-  private[graft] def graphPagerankImpl(
-      s: SparkSession, d: String, checkpoint: Boolean): DataFrame = {
-    def cp(df: DataFrame): DataFrame = if (checkpoint) df.localCheckpoint() else df
+  def graphPagerank(s: SparkSession, d: String): DataFrame = {
     val pairs = Q.bigramEdges(t(s, d, "documents").select(expr(wordsExpr).as("ws")))
     // out-degree pre-joined ONCE onto the edge table (round 16): the od
     // column rides the checkpoint, so each iteration's action no longer
     // recomputes and re-broadcasts outdeg from the edge checkpoint. The
     // contribution expression still reads floor((r·wt)/od) with the same
     // association, so every fixed-point value is unchanged.
-    val edges = cp {
-      val e = pairs.groupBy("src", "dst").agg(sum("pc").as("wt"))
-      e.join(broadcast(e.groupBy(col("src")).agg(sum("wt").as("od"))), "src")
-    }
-    val nodes = cp(edges.select(col("src").as("w"))
-      .union(edges.select(col("dst"))).distinct())
+    val e = pairs.groupBy("src", "dst").agg(sum("pc").as("wt"))
+    val edges = e
+      .join(broadcast(e.groupBy(col("src")).agg(sum("wt").as("od"))), "src")
+      .localCheckpoint()
+    val nodes = edges.select(col("src").as("w"))
+      .union(edges.select(col("dst"))).distinct().localCheckpoint()
     // N is a scalar: count it once instead of re-aggregating + re-
     // broadcasting the one-row nn table inside every iteration's action.
-    // lit(n) feeds the identical double expressions. On the
-    // checkpoint=false (plan-audit) path this count recomputes the full
-    // bigram aggregation once — accepted: that path exists only so the
-    // spec can SEE the un-truncated iteration plan; it never runs in the
-    // registry (round-17 ADVICE).
+    // lit(n) feeds the identical double expressions.
     val n = nodes.count()
-    var ranks = cp(nodes
-      .select(col("w"), floor(lit(PrScale) / lit(n).cast("long")).as("r")))
+    var ranks = nodes
+      .select(col("w"), floor(lit(PrScale) / lit(n).cast("long")).as("r"))
+      .localCheckpoint()
     for (_ <- 1 to PrIters) {
       val contrib = edges
         .join(broadcast(ranks.withColumnRenamed("w", "src")), "src")
         .select(col("dst").as("w"),
           floor(col("r").cast("double") * col("wt") / col("od")).as("ctr"))
         .groupBy("w").agg(sum("ctr").as("s"))
-      ranks = cp(nodes
+      ranks = nodes
         .join(broadcast(contrib), Seq("w"), "left")
         .select(col("w"),
           (floor(lit(0.15) * lit(PrScale) / lit(n).cast("long")) +
-            floor(lit(0.85) * coalesce(col("s"), lit(0L)))).as("r")))
+            floor(lit(0.85) * coalesce(col("s"), lit(0L)))).as("r"))
+        .localCheckpoint()
     }
     ranks.select(col("w"), col("r").as("rank_e12"))
       .orderBy(col("rank_e12").desc, col("w"))
@@ -3109,26 +2910,22 @@ object Pipeline {
     * unreached after [[BfsIters]] hops are absent, matching the oracle's
     * fixed CTE chain. */
   val BfsIters = 4
-  def graphBfsDepth(s: SparkSession, d: String): DataFrame =
-    graphBfsDepthImpl(s, d, checkpoint = true)
-  private[graft] def graphBfsDepthImpl(
-      s: SparkSession, d: String, checkpoint: Boolean): DataFrame = {
-    def cp(df: DataFrame): DataFrame = if (checkpoint) df.localCheckpoint() else df
+  def graphBfsDepth(s: SparkSession, d: String): DataFrame = {
     val words = t(s, d, "documents")
       .select(col("doc_id"), expr(wordsExpr).as("ws"))
-    val edgesCp = cp(Q.bigramEdges(words)
-      .select(col("src"), col("dst")).distinct())
+    val edgesCp = Q.bigramEdges(words)
+      .select(col("src"), col("dst")).distinct().localCheckpoint()
     val uc = words.select(explode(col("ws")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-    var dist = cp(uc.orderBy(col("c").desc, col("w")).limit(1)
-      .select(col("w"), lit(0L).as("depth")))
+    var dist = uc.orderBy(col("c").desc, col("w")).limit(1)
+      .select(col("w"), lit(0L).as("depth")).localCheckpoint()
     for (_ <- 1 to BfsIters) {
       val next = edgesCp
         .join(broadcast(dist.withColumnRenamed("w", "src")
           .withColumnRenamed("depth", "pd")), "src")
         .select(col("dst").as("w"), (col("pd") + 1L).as("depth"))
-      dist = cp(dist.union(next).groupBy("w")
-        .agg(min("depth").as("depth")))
+      dist = dist.union(next).groupBy("w")
+        .agg(min("depth").as("depth")).localCheckpoint()
     }
     dist.orderBy("depth", "w")
   }

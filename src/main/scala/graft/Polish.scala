@@ -645,13 +645,6 @@ object Polish {
 
   // ---------- local clustering coefficient ----------
 
-  /** Top-20 nodes of the word-adjacency graph by LOCAL clustering
-    * coefficient 2·t_v / (deg_v·(deg_v−1)) — the per-node counterpart of
-    * graph_triangles' global transitivity (same edge construction,
-    * Pipeline.graphTriangles). Each x<y<z triangle row explodes into its
-    * three member nodes for a node-keyed count; the graph is
-    * vocabulary-bounded, so the broadcast triangle join and the final
-    * top-20 window both run on bounded tables. */
   /** Distinct undirected word-adjacency edges (a < b), the shared graph
     * of [[graphClusteringCoeff]] / [[graphDegreeAssortativity]] — same
     * construction as Pipeline.graphTriangles. Vocabulary-bounded. */
@@ -666,6 +659,13 @@ object Polish {
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
 
+  /** Top-20 nodes of the word-adjacency graph by LOCAL clustering
+    * coefficient 2·t_v / (deg_v·(deg_v−1)) — the per-node counterpart of
+    * graph_triangles' global transitivity (same edge construction,
+    * Pipeline.graphTriangles). Each x<y<z triangle row explodes into its
+    * three member nodes for a node-keyed count; the graph is
+    * vocabulary-bounded, so the broadcast triangle join and the final
+    * top-20 window both run on bounded tables. */
   def graphClusteringCoeff(s: SparkSession, d: String): DataFrame = {
     val und = undirectedEdges(s, d).localCheckpoint()
     val deg = und.select(col("a").as("node"))

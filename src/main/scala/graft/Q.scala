@@ -410,6 +410,186 @@ object Q {
     cross.unionByName(inGroup)
   }
 
+  /** Track which RDDs `body` pins (cache/localCheckpoint). A pinned
+    * Dataset gives no handle to its persisted RDD, so `unpersist()` on it
+    * frees nothing; iterative ops release superseded snapshots by these
+    * ids instead. */
+  private[graft] def pinnedIds(s: SparkSession)(
+      body: => DataFrame): (DataFrame, Set[Int]) = {
+    val pre = s.sparkContext.getPersistentRDDs.keySet.toSet
+    val df = body
+    (df, s.sparkContext.getPersistentRDDs.keySet.toSet -- pre)
+  }
+  private[graft] def release(s: SparkSession, ids: Set[Int]): Unit = ids.foreach(id =>
+    s.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+
+  /** Most edges [[components]] collects to solve on the driver: 2²¹.
+    * Driver memory at the cap: the typed `(Long, Long)` collect holds 2²¹
+    * Tuple2 cells (~32–130 MB depending on boxing; no Row layer), and the
+    * union-find holds at most 2·2²¹ ≈ 4.2M entries in two parallel
+    * `long[]` arrays (2²³ slots at ≤ 0.5 load), ~143 MB flat. The
+    * transient peak, ≲ 300 MB, is the class of Spark's own small-side
+    * broadcast, paid only after an exact count has shown the edges fit;
+    * it scales linearly with the cap (a 2³⁰ cap would need ~32 GB).
+    * Over the cap nothing is collected. */
+  private[graft] val ComponentsDriverCap: Long = 1L << 21
+
+  /** The one connected-components solve (the reference's recursive-query
+    * fixpoint). `edges` holds two LONG columns, the endpoints of each
+    * edge in either direction. Returns one (node, label) row per endpoint,
+    * `label` being the minimum node id of its component.
+    *
+    * The edges are pinned once and counted. Up to [[ComponentsDriverCap]]
+    * they are collected and solved by [[componentsDriver]], which saves
+    * the distributed fixpoint's per-round stage launches; over the cap
+    * [[componentsDistributed]] runs against the same pin. Both paths
+    * return the same rows. */
+  private[graft] def components(s: SparkSession, edges: DataFrame): DataFrame = {
+    val (pinned, ids) = pinnedIds(s)(edges.toDF("u", "v").localCheckpoint())
+    val labels =
+      if (pinned.count() <= ComponentsDriverCap) {
+        implicit val enc = org.apache.spark.sql.Encoders.tuple(
+          org.apache.spark.sql.Encoders.scalaLong,
+          org.apache.spark.sql.Encoders.scalaLong)
+        s.createDataFrame(componentsDriver(pinned.as[(Long, Long)].collect()))
+          .toDF("node", "label")
+      } else componentsDistributed(s, pinned)
+    release(s, ids) // both paths' labels are past the pin
+    labels
+  }
+
+  /** Driver union-find, union-by-min-root so every tree's root is its
+    * component's minimum id; path-compressed, O(edges · α). Returns one
+    * (node, label) pair per endpoint. */
+  private[graft] def componentsDriver(
+      pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = new LongLongOpenMap(math.max(16, pairs.length * 2))
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent.put(c, r); c = n }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      if (!parent.contains(a)) parent.put(a, a)
+      if (!parent.contains(b)) parent.put(b, b)
+      val ra = find(a); val rb = find(b)
+      // attach the larger root under the smaller: roots stay minima
+      if (ra < rb) parent.put(rb, ra) else if (rb < ra) parent.put(ra, rb)
+    }
+    parent.keysIterator.map(x => (x, find(x))).toSeq
+  }
+
+  /** Distributed min-label fixpoint, (node, label) rows as
+    * [[componentsDriver]]'s. Each round takes the minimum label over a
+    * node's neighbours, then jumps once (label ← the label of its label;
+    * every label is itself a node id, so the self-join is total), so a
+    * label travels 2^round hops and a path of diameter D converges in
+    * O(log D) rounds. Labels never rise, so Σlabel strictly falls until
+    * the fixpoint: the sum is the convergence check and each round's only
+    * extra job. It is summed as decimal(38,0), since a long sum overflows
+    * at node-id × count scale and a wrapped sum could stall early. Not
+    * converging in 25 rounds fails loudly. Each superseded snapshot is
+    * released once the next one is pinned. */
+  private[graft] def componentsDistributed(
+      s: SparkSession, edges: DataFrame): DataFrame = {
+    val e = edges.toDF("u", "v")
+    val adj = e.union(e.select(col("v"), col("u")))
+    var (lbl, lblIds) = pinnedIds(s) {
+      adj.select(col("u").as("node"), col("u").as("label")).distinct()
+        .localCheckpoint()
+    }
+    def labelSum(df: DataFrame): java.math.BigDecimal =
+      df.agg(coalesce(sum(col("label").cast(DecimalType(38, 0))),
+        lit(0).cast(DecimalType(38, 0)))).head().getDecimal(0)
+    def lower(other: String): Column =
+      least(col("label"), coalesce(col(other), col("label"))).as("label")
+    var lastSum = labelSum(lbl)
+    var converged = false
+    var iter = 0
+    while (!converged && iter < 25) {
+      val nbr = adj.join(lbl.withColumnRenamed("node", "u"), "u")
+        .groupBy(col("v").as("node")).agg(min("label").as("nl"))
+      // pinned because the jump reads it twice (self-join)
+      val (prop, propIds) = pinnedIds(s) {
+        lbl.join(nbr, Seq("node"), "left").select(col("node"), lower("nl"))
+          .localCheckpoint()
+      }
+      val (next, nextIds) = pinnedIds(s) {
+        prop.join(prop.select(col("node").as("label"), col("label").as("jl")),
+            Seq("label"), "left")
+          .select(col("node"), lower("jl"))
+          .localCheckpoint()
+      }
+      val total = labelSum(next)
+      release(s, propIds ++ lblIds)
+      lbl = next; lblIds = nextIds
+      converged = total.compareTo(lastSum) == 0
+      lastSum = total
+      iter += 1
+    }
+    require(converged,
+      s"component label propagation did not converge in $iter rounds")
+    lbl
+  }
+
+  /** Primitive long→long open-addressing map (linear probing,
+    * power-of-two capacity, grow at 0.7 load) for [[componentsDriver]]:
+    * two flat `long[]` plus a `boolean[]` occupancy lane, no per-entry
+    * node or boxing. */
+  private[graft] final class LongLongOpenMap(expected: Int) {
+    // `expected * 2 - 1` overflows Int at expected ≥ 2^30, which would
+    // yield a negative/zero capacity and corrupt the probe mask. Today's
+    // ComponentsDriverCap (2^21 edges → expected ≤ 2^22) is nowhere
+    // near; a future bump past 2^29 fails loudly here instead.
+    require(expected >= 0 && expected <= (1 << 29),
+      s"LongLongOpenMap expected size $expected exceeds 2^29 (capacity math overflows Int)")
+    private var cap = java.lang.Integer.highestOneBit(
+      math.max(16, expected) * 2 - 1) << 1
+    private var keys = new Array[Long](cap)
+    private var vals = new Array[Long](cap)
+    private var used = new Array[Boolean](cap)
+    private var n = 0
+    private def slot(k: Long): Int = {
+      var h = k * -7046029254386353131L // splitmix64 finalizer multiplier
+      h ^= (h >>> 32)
+      var i = h.toInt & (cap - 1)
+      while (used(i) && keys(i) != k) i = (i + 1) & (cap - 1)
+      i
+    }
+    def contains(k: Long): Boolean = used(slot(k))
+    /** Value for a present key; the union-find only reads keys it has put. */
+    def apply(k: Long): Long = {
+      val i = slot(k)
+      if (!used(i)) throw new NoSuchElementException(s"key $k")
+      vals(i)
+    }
+    def put(k: Long, v: Long): Unit = {
+      val i = slot(k)
+      if (!used(i)) {
+        used(i) = true; keys(i) = k; n += 1
+        if (n.toLong * 10 > cap.toLong * 7) grow()
+      }
+      vals(slot(k)) = v // re-probe: grow() may have moved the slot
+    }
+    private def grow(): Unit = {
+      val (ok, ov, ou) = (keys, vals, used)
+      cap <<= 1
+      keys = new Array[Long](cap); vals = new Array[Long](cap)
+      used = new Array[Boolean](cap)
+      var i = 0
+      while (i < ok.length) {
+        if (ou(i)) { val j = slot(ok(i)); used(j) = true; keys(j) = ok(i); vals(j) = ov(i) }
+        i += 1
+      }
+    }
+    def keysIterator: Iterator[Long] = {
+      val (ks, u) = (keys, used) // no implicit Array→Seq copy
+      (0 until cap).iterator.filter(u(_)).map(ks(_))
+    }
+  }
+
   // --- DuckDB oracle SQL fragments mirroring the helpers above ---
   def DSUM(e: String): String =
     s"CAST(sum(CAST(($e) AS DECIMAL(30,6))) AS DOUBLE)"

@@ -616,18 +616,19 @@ object Refine {
 
   private val LpaIters = 3
 
-  /** Synchronous label propagation over the word co-occurrence graph
+  /** The weighted word-adjacency graph and its [[LpaIters]]-round
+    * label-propagation communities — shared by [[graphLabelProp]] (which
+    * emits the labels) and [[graphModularity]] (which scores them).
+    * Returns (labels (w, lbl), weighted directed-both-ways edges
+    * (src, dst, wt)).
+    *
+    * Synchronous label propagation over the word co-occurrence graph
     * (consecutive-word edges, symmetrized, weight = occurrence count):
     * every node adopts the label with the highest neighbor-weight sum
     * (ties to the smallest label) for three rounds. All tables after the
     * first aggregation are vocabulary-bounded — the per-iteration work
     * is one keyed join + one argmax window on the edge table, the LPA
     * shape that survives any corpus size with a bounded vocabulary. */
-  /** The weighted word-adjacency graph and its [[LpaIters]]-round
-    * label-propagation communities — shared by [[graphLabelProp]] (which
-    * emits the labels) and [[graphModularity]] (which scores them).
-    * Returns (labels (w, lbl), weighted directed-both-ways edges
-    * (src, dst, wt)). */
   private def lpaCommunities(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val pairs = Q.bigramEdges(t(s, d, "documents")

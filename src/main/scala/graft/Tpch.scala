@@ -521,8 +521,9 @@ object Tpch {
     * near-full-fact shuffle that the 15% part filter would have skipped.
     * The remaining gap to the baseline is structural: this corpus ships
     * no partsupp, so q16 reads the 6M-row lineitem bridge where the
-    * reference reads 800k partsupp rows.) */
-  /** q16 shape history: countDistinct's own two-phase expand IS the
+    * reference reads 800k partsupp rows.)
+    *
+    * q16 shape history: countDistinct's own two-phase expand IS the
     * distinct — both explicit pre-distinct variants lost alternating
     * A/Bs at SF1 (round 15: distinct before the part filter; round 16:
     * semi-filter then distinct (partkey, suppkey) before attaching part
@@ -557,8 +558,9 @@ object Tpch {
       |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin
 
   /** q17: per-part average-quantity threshold via a grouped self-join
-    * (quantities are whole numbers → double sums are exact). */
-  /** Round-17 shape: the per-part avg-quantity threshold aggregates only
+    * (quantities are whole numbers → double sums are exact).
+    *
+    * Round-17 shape: the per-part avg-quantity threshold aggregates only
     * lineitems of Brand#23 parts — brand is a part attribute, so "all
     * lineitems of part X" for a surviving X is exactly the brand-join
     * subset, and every threshold the outer filter reads is unchanged.
@@ -694,8 +696,9 @@ object Tpch {
       |ORDER BY s_name""".stripMargin
 
   /** q21 adapted: suppliers whose line was the last to ship (> 30 days
-    * after ordering) in a multi-supplier finalized order. */
-  /** q21 shape history (round 16): the full decorrelation — per-(order,
+    * after ordering) in a multi-supplier finalized order.
+    *
+    * q21 shape history (round 16): the full decorrelation — per-(order,
     * supp) max-shipdate aggregate + (m1, n1, m2) windows replacing both
     * the semi and anti fact joins — was oracle-exact but LOST a 3-pair
     * alternating A/B under the driver protocol (0.44–0.49 s shipped vs

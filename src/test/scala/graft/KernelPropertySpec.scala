@@ -866,7 +866,7 @@ object KernelPropertySpec extends Properties("graft.kernels") {
   property("LongLongOpenMap replays HashMap put/get/contains, incl. growth") =
     Prop.forAll(genOps, Gen.chooseNum(0, 4)) { (ops, cap) =>
       // tiny initial capacity forces the grow path on most runs
-      val m = new Pipeline.LongLongOpenMap(cap)
+      val m = new Q.LongLongOpenMap(cap)
       val ref = new java.util.HashMap[Long, Long]()
       ops.foreach { case (k, v) => m.put(k, v); ref.put(k, v) }
       val sameEntries = m.keysIterator.map(k => (k, m(k))).toMap ==
@@ -882,11 +882,11 @@ object KernelPropertySpec extends Properties("graft.kernels") {
 
   property("LongLongOpenMap rejects expected sizes whose capacity math would overflow Int") =
     // `expected * 2 - 1` overflows at 2^30; the guard trips at > 2^29 so a
-    // future DedupFixpointDriverCap bump fails loudly, never corrupts masks
+    // future Q.ComponentsDriverCap bump fails loudly, never corrupts masks
     Prop.throws(classOf[IllegalArgumentException]) {
-      new Pipeline.LongLongOpenMap((1 << 29) + 1)
+      new Q.LongLongOpenMap((1 << 29) + 1)
     } && Prop.throws(classOf[IllegalArgumentException]) {
-      new Pipeline.LongLongOpenMap(-1)
+      new Q.LongLongOpenMap(-1)
     }
 
   // ---------- GramDecimalSum.scaledLong vs the engine's Decimal cast ----------

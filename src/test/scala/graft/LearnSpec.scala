@@ -399,25 +399,3 @@ class LearnSpec extends AnyFunSuite {
     }
   }
 }
-
-/** Round-16 adaptive component solve (graphComponents): the driver
-  * union-find fast path must agree with the distributed pointer-jumping
-  * fixpoint it short-circuits. */
-class ComponentPathsSpec extends AnyFunSuite {
-  import SparkSpec._
-
-  test("componentLabelsDistributed == repComponentsDriver on a star graph") {
-    import org.apache.spark.sql.functions.col
-    // star edges member->bucket-min, two chained buckets, isolated pair
-    val pairs: Seq[(Long, Long)] = Seq(
-      (2L, 1L), (3L, 1L), (4L, 3L), (5L, 3L),   // chained stars -> comp 1
-      (7L, 6L), (9L, 8L), (10L, 8L))
-    val edges = spark.createDataFrame(pairs).toDF("u", "v")
-    val dist = Learn.componentLabelsDistributed(spark, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val driver = Pipeline.repComponentsDriver(pairs.toArray).toMap
-    assert(dist == driver)
-    assert(dist == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 8L, 10L -> 8L))
-  }
-}

@@ -952,6 +952,14 @@ class BpeSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     assert(got == expected.result())
   }
+
+  test("a build releases every sequence snapshot it pins") {
+    // the output is built on the driver, so no snapshot outlives the build
+    val s = spark.newSession()
+    val before = s.sparkContext.getPersistentRDDs.keySet.toSet
+    SparkEntry.queries("text_bpe_merges")(s, sf)
+    assert(s.sparkContext.getPersistentRDDs.keySet.toSet == before)
+  }
 }
 
 /** Graph analytics, collocation, entropy and event-outlier operators:
@@ -1155,17 +1163,40 @@ class GraphTextSpec extends AnyFunSuite {
   }
 
   test("plan audit: iterative graph ops broadcast the state table") {
-    // checkpoint=false keeps the whole multi-iteration lineage in one
-    // plan (the production path truncates it per round); every
-    // state-vs-edges join must be a BroadcastHashJoin, never a shuffle
-    // or cartesian — the property that keeps an iteration O(edges).
-    Seq(Pipeline.graphPagerankImpl(spark, sf, checkpoint = false),
-      Pipeline.graphBfsDepthImpl(spark, sf, checkpoint = false))
-      .foreach { df =>
-        val plan = df.queryExecution.executedPlan.toString
-        assert(plan.contains("BroadcastHashJoin"), plan)
-        assert(!plan.contains("CartesianProduct"), plan)
-        assert(!plan.contains("SortMergeJoin"), plan)
+    // each iteration pins its state table, so the plan of that pin's
+    // action is the iteration's plan; a listener records them during the
+    // shipped build. Every state-vs-edges join must be a
+    // BroadcastHashJoin, never a shuffle or cartesian join — the
+    // property that keeps an iteration O(edges).
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def pinPlans(build: => Unit): Seq[String] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution,
+            durationNs: Long): Unit =
+          if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+        override def onFailure(funcName: String, qe: QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try { build; ListenerBusDrain(spark.sparkContext) }
+      finally spark.listenerManager.unregister(listener)
+      plans.toArray(Array.empty[String]).toSeq
+    }
+    Seq(("graph_pagerank", Pipeline.PrIters), ("graph_bfs_depth", Pipeline.BfsIters))
+      .foreach { case (op, iters) =>
+        val plans = pinPlans(SparkEntry.queries(op)(spark, sf))
+        // the last `iters` pins are the iterations, in order
+        assert(plans.size >= iters, s"$op: ${plans.size} pins")
+        plans.takeRight(iters).foreach(p =>
+          assert(p.contains("BroadcastHashJoin"), s"$op: $p"))
+        plans.foreach { p =>
+          assert(!p.contains("CartesianProduct"), s"$op: $p")
+          assert(!p.contains("SortMergeJoin"), s"$op: $p")
+        }
       }
   }
 
@@ -1846,33 +1877,52 @@ class IngestOpsSpec extends AnyFunSuite {
   }
 }
 
-/** Round-16 adaptive component solve: the driver union-find fast path of
-  * dedupGroups must agree exactly with the distributed min-label fixpoint
-  * it short-circuits, on graphs with multi-edge chains, cliques, isolated
-  * pairs, and duplicate/symmetric edges. */
-class DedupComponentPathsSpec extends AnyFunSuite {
+/** The one connected-components core: its driver union-find and its
+  * distributed fixpoint return the same rows, and both return each
+  * node's true component minimum. */
+class ComponentsSpec extends AnyFunSuite {
   import SparkSpec._
 
-  test("driver union-find == distributed min-label fixpoint") {
-    // chain 1-2-3-4, clique {10,11,12}, pair (20,21), dup + reversed
-    // edges, self-linked hub (30 bridges two chains)
-    val pairs: Seq[(Long, Long)] = Seq(
+  test("distributed fixpoint == driver union-find == true minima on three graphs") {
+    // chain 1-2-3-4 (+5), clique {10,11,12}, pair (20,21) with dup and
+    // reversed edges, hub 30 bridging two chains
+    val dedupGraph: Seq[(Long, Long)] = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L),
       (20L, 21L), (21L, 20L), (20L, 21L), (30L, 31L), (32L, 30L),
       (33L, 32L), (5L, 4L))
-    val driver = Pipeline.repComponentsDriver(pairs.toArray).toMap
-    val p = spark.createDataFrame(pairs).toDF("r1", "r2")
-    val dist = Pipeline.repComponentsDistributed(spark, p)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(driver == dist,
-      s"driver=$driver dist=$dist")
-    // and the labels are the true component minima
-    val expect = Map(
+    val dedupMinima = Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L,
       30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L)
-    assert(driver == expect)
+    // star edges member->bucket-min, two chained buckets, isolated pair
+    val chainedStars: Seq[(Long, Long)] = Seq(
+      (2L, 1L), (3L, 1L), (4L, 3L), (5L, 3L),
+      (7L, 6L), (9L, 8L), (10L, 8L))
+    val starMinima = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 8L, 10L -> 8L)
+    // an 80-node path visiting the ids in a scrambled order: a label
+    // moving one hop per round would need 79 rounds
+    val order = (0 until 80).map(i => (i * 37 % 80 + 1).toLong)
+    val path = order.zip(order.tail)
+    val pathMinima = order.map(_ -> 1L).toMap
+    for ((name, edges, minima) <- Seq(
+        ("dedup graph", dedupGraph, dedupMinima),
+        ("chained stars", chainedStars, starMinima),
+        ("80-node path", path, pathMinima))) {
+      val driver = Q.componentsDriver(edges.toArray).toMap
+      val dist = Q.componentsDistributed(spark,
+          spark.createDataFrame(edges).toDF("a", "b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(dist == driver, s"$name: driver=$driver dist=$dist")
+      assert(driver == minima, name)
+    }
   }
+}
+
+/** dedupGroups over the core's distributed path equals the shipped
+  * operator, which solves on the driver at the spec corpus. */
+class DedupComponentPathsSpec extends AnyFunSuite {
+  import SparkSpec._
 
   test("dedupGroups output at the spec corpus matches the distributed path") {
     // force the whole operator through both component routes: the shipped
@@ -1882,8 +1932,9 @@ class DedupComponentPathsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val (members, repPairs) = Pipeline.minhashScaffold(spark, sf)
     import org.apache.spark.sql.functions._
-    val labelsRep = Pipeline.repComponentsDistributed(
-      spark, repPairs.select(col("r1"), col("r2")))
+    val labelsRep = Q.componentsDistributed(
+        spark, repPairs.select(col("r1"), col("r2")))
+      .withColumnRenamed("node", "rep")
     val docRep = members.join(
       members.groupBy("th").agg(min("doc_id").as("rep"),
         count(lit(1)).as("gsz")), "th")
