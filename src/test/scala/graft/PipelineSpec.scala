@@ -1880,49 +1880,59 @@ class IngestOpsSpec extends AnyFunSuite {
 /** The one connected-components core: its driver union-find and its
   * distributed fixpoint return the same rows, and both return each
   * node's true component minimum. */
-class ComponentsSpec extends AnyFunSuite {
+object ComponentsSpec {
   import SparkSpec._
+  import org.scalatest.Assertions._
 
-  test("distributed fixpoint == driver union-find == true minima on three graphs") {
-    // chain 1-2-3-4 (+5), clique {10,11,12}, pair (20,21) with dup and
-    // reversed edges, hub 30 bridging two chains
-    val dedupGraph: Seq[(Long, Long)] = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L),
-      (20L, 21L), (21L, 20L), (20L, 21L), (30L, 31L), (32L, 30L),
-      (33L, 32L), (5L, 4L))
-    val dedupMinima = Map(
-      1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L,
-      30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L)
-    // star edges member->bucket-min, two chained buckets, isolated pair
-    val chainedStars: Seq[(Long, Long)] = Seq(
-      (2L, 1L), (3L, 1L), (4L, 3L), (5L, 3L),
-      (7L, 6L), (9L, 8L), (10L, 8L))
-    val starMinima = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 8L, 10L -> 8L)
-    // an 80-node path visiting the ids in a scrambled order: a label
-    // moving one hop per round would need 79 rounds
-    val order = (0 until 80).map(i => (i * 37 % 80 + 1).toLong)
-    val path = order.zip(order.tail)
-    val pathMinima = order.map(_ -> 1L).toMap
-    for ((name, edges, minima) <- Seq(
-        ("dedup graph", dedupGraph, dedupMinima),
-        ("chained stars", chainedStars, starMinima),
-        ("80-node path", path, pathMinima))) {
-      val driver = Q.componentsDriver(edges.toArray).toMap
-      val dist = Q.componentsDistributed(spark,
-          spark.createDataFrame(edges).toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(dist == driver, s"$name: driver=$driver dist=$dist")
-      assert(driver == minima, name)
-    }
+  def checkBothPaths(edges: Seq[(Long, Long)], minima: Map[Long, Long]): Unit = {
+    val driver = Q.componentsDriver(edges.toArray).toMap
+    val dist = Q.componentsDistributed(spark,
+        spark.createDataFrame(edges).toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(dist == driver, s"driver=$driver dist=$dist")
+    assert(driver == minima)
   }
 }
 
-/** dedupGroups over the core's distributed path equals the shipped
+class ComponentsSpec extends AnyFunSuite {
+  test("distributed fixpoint == driver union-find == true minima on an 80-node scrambled path") {
+    // the path visits the ids in a scrambled order: a label moving one
+    // hop per round would need 79 rounds
+    val order = (0 until 80).map(i => (i * 37 % 80 + 1).toLong)
+    ComponentsSpec.checkBothPaths(order.zip(order.tail), order.map(_ -> 1L).toMap)
+  }
+}
+
+/** The core's two paths agree on chained star buckets, the edge shape
+  * graphComponents feeds it. */
+class ComponentPathsSpec extends AnyFunSuite {
+  test("componentLabelsDistributed == repComponentsDriver on a star graph") {
+    // star edges member->bucket-min, two chained buckets, isolated pair
+    ComponentsSpec.checkBothPaths(Seq(
+        (2L, 1L), (3L, 1L), (4L, 3L), (5L, 3L),   // chained stars -> comp 1
+        (7L, 6L), (9L, 8L), (10L, 8L)),
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+        6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 8L, 10L -> 8L))
+  }
+}
+
+/** The core's two paths agree on the rep-pair graphs dedupGroups feeds
+  * it, and dedupGroups over the distributed path equals the shipped
   * operator, which solves on the driver at the spec corpus. */
 class DedupComponentPathsSpec extends AnyFunSuite {
   import SparkSpec._
+
+  test("driver union-find == distributed min-label fixpoint") {
+    // chain 1-2-3-4 (+5), clique {10,11,12}, pair (20,21) with dup and
+    // reversed edges, hub 30 bridging two chains
+    ComponentsSpec.checkBothPaths(Seq(
+        (1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L),
+        (20L, 21L), (21L, 20L), (20L, 21L), (30L, 31L), (32L, 30L),
+        (33L, 32L), (5L, 4L)),
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L,
+        30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L))
+  }
 
   test("dedupGroups output at the spec corpus matches the distributed path") {
     // force the whole operator through both component routes: the shipped
