@@ -189,6 +189,7 @@ object Advanced {
       reachRdd = nextRdd
       iter += 1
     }
+    edges.unpersist() // the result reads reachRdd only
     s.createDataset(reachRdd).toDF("node").orderBy("node")
   }
   val recReachabilitySql: String =

@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.InternalRow
 
 /** Headline benchmark: q1..q22 on SPARK_GRAFT_SF_DIR, one JSON line out.
@@ -53,10 +54,11 @@ object Bench {
     // clones the prepared physical plan — a fresh tree with fresh shuffle
     // dependencies, so the WHOLE query (scans, shuffles, joins, final
     // stage) re-executes every sample; generated-code sources are
-    // identical so Spark's codegen cache hits and the JVM's compiled code
-    // stays hot. Re-running the plan's RDD directly would NOT be honest:
-    // the scheduler reuses shuffle map outputs across jobs on one RDD
-    // lineage, so only the result stage would be re-timed.
+    // identical so Spark's codegen cache (Harness.CodegenCacheEntries)
+    // hits and the JVM's compiled code stays hot. Re-running the plan's
+    // RDD directly would NOT be honest: the scheduler reuses shuffle map
+    // outputs across jobs on one RDD lineage, so only the result stage
+    // would be re-timed.
     val prepared: Map[String, org.apache.spark.sql.execution.SparkPlan] =
       names.flatMap { n =>
         // NonFatal only: a fatal error (OOM, stack overflow) must crash
@@ -193,15 +195,17 @@ object Bench {
     // — consecutive executions per query, analogous to the reference
     // timing all of one query's statements together (tpch.py runs each
     // query once per suite, so it has no repeated-sample ordering policy
-    // of its own; BENCH_SF1.md records both orderings). Under AQE every
-    // sample is a full rebuild BY DESIGN (see run() above), and round-14
-    // measurement showed interleaved rebuilds pay ~0.5-1 s/sample of driver
-    // re-planning that consecutive rebuilds do not (Catalyst/JIT caches stay
-    // hot for one plan shape) — an artifact of the harness, not the engine:
-    // the same binary reads q16 0.90 s query-major vs 2.13 s iteration-major
-    // on identical plans. Iteration-major stays the default for prepared-
-    // plan (non-AQE) runs, where samples skip planning entirely and the
-    // spike-dilution argument below still holds.
+    // of its own; BENCH_SF1.md records both orderings). Round 14 read q16
+    // at 0.90 s query-major and 2.13 s iteration-major on identical plans
+    // (under AQE, where every sample is a full rebuild, see run() above).
+    // The compile counts explain the order effect: Spark's codegen cache
+    // held 100 classes, fewer than the 419 one q1→q22 pass generates.
+    // Measured on prepared plans at 100 entries (sf0.1, 4 cpus, 5
+    // iterations), a pass compiled 424.6 classes again iteration-major and
+    // 85.6 query-major, where only each query's first sample misses; at
+    // Harness.CodegenCacheEntries both compile 0. Iteration-major stays
+    // the default: with every class cached, the orders differ only in
+    // where a load spike lands (see below).
     val order = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "iteration")
     // Samples accumulate in mutable buffers so a canary abort still emits
     // whatever completed (stamped aborted+poisoned). midCanary() runs
@@ -210,6 +214,7 @@ object Bench {
     val samples = scala.collection.mutable.LinkedHashMap(
       names.map(n => n -> scala.collection.mutable.ArrayBuffer[Double]()): _*)
     var aborted = false
+    val compilesBefore = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       if (order == "query")
         names.foreach { n =>
@@ -225,6 +230,8 @@ object Bench {
         }
       }
     } catch { case PoisonedAbort => aborted = true }
+    val compilesPerPass =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compilesBefore).toDouble / iters
     val results: Seq[(String, Seq[Double])] =
       names.map(n => n -> samples(n).toSeq.filter(_ >= 0).sorted)
     val qs = results.map { case (k, ok) =>
@@ -257,10 +264,13 @@ object Bench {
     val canaryJson =
       if (!canaryEnabled) """{"enabled":false}"""
       else s"""{"enabled":true,"query":"$canaryName","threshold_sec":$canaryThresh,"pre_attempts":${preAttempts.map(jarr).mkString("[", ",", "]")},"mid":${midAttempts.map(jarr).mkString("[", ",", "]")},"mid_hot":$midHot,"post":${jarr(postSamples)}}"""
-    // "uncached" is stamped only when the lane knob is on, so driver-run
-    // artifacts (env unset) keep the exact historical JSON shape.
+    // "uncached" is stamped only when the lane knob is on; driver-run
+    // artifacts (env unset) never carried it.
     val laneJson = if (uncached) ""","uncached":true""" else ""
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"failed":$failed,"aborted":$aborted,"load":$load,"poisoned":$poisoned,"canary":$canaryJson,"sf":"$sfDir"$laneJson}""")
+    // the session the timings were taken on, and the compiles they paid
+    // (Janino compiles in the timed region, canary samples included)
+    val config = f""","cpus":${profile.cores},"parts":${profile.parts},"shuffle":${profile.shuffle},"aqe":${profile.aqe},"order":"$order","codegen_cache":${spark.conf.get("spark.sql.codegen.cache.maxEntries")},"compiles_per_pass":$compilesPerPass%.1f"""
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"failed":$failed,"aborted":$aborted,"load":$load,"poisoned":$poisoned,"canary":$canaryJson,"sf":"$sfDir"$laneJson$config}""")
     spark.stop()
   }
 }

@@ -100,9 +100,33 @@ object Harness {
     Profile(c, shuffle = c, aqe = true, broadcast = None, parts = c)
   }
 
+  /** Entries in Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). A class
+    * evicted from it is compiled again by Janino the next time its query
+    * runs, so the cache holds every class one pass of the engine's own
+    * harnesses generates, with headroom. Measured with a cache too large
+    * to evict (sf0.1, 4 cpus), a whole [[Bench]] run compiled 419 distinct
+    * classes and a whole [[PipeBench]] run 2,459. At 100 entries a timed
+    * `Bench` pass compiled 424.6 of them again; at this size, none. */
+  val CodegenCacheEntries = 4096
+
+  /** Sets [[CodegenCacheEntries]] as a JVM system property unless the
+    * JVM line set one (`-Dspark.sql.codegen.cache.maxEntries=100` gives
+    * Spark's default back for an A/B). It has to be a system property: the
+    * conf is static, `CodeGenerator` reads it once per JVM, and
+    * `SparkConf` picks up `spark.*` system properties when it is built, so
+    * this must run before the JVM's first `SparkContext`. Called by
+    * [[session]] and by [[SparkEntry]]'s initializer, which every driver
+    * reads before it builds a session of its own. */
+  def sizeCodegenCache(): Unit =
+    sys.props.getOrElseUpdate("spark.sql.codegen.cache.maxEntries",
+      CodegenCacheEntries.toString)
+
   /** The session for `p` on the shared base conf: UTC session time zone,
-    * no UI, parquet nanos read as longs, WARN logging. */
+    * no UI, parquet nanos read as longs, WARN logging, and the codegen
+    * cache at [[CodegenCacheEntries]]. */
   def session(p: Profile): SparkSession = {
+    sizeCodegenCache()
     val b = SparkSession.builder()
       .master(s"local[${p.cores}]")
       .config("spark.sql.shuffle.partitions", p.shuffle.toLong)

@@ -1181,8 +1181,6 @@ object Pipeline {
     (1 to dim).map(term).mkString(" + ")
   private[graft] def IvfDist(dim: Int, a: String, b: String): String =
     unrolled(dim, i => s"(element_at($a,$i)-element_at($b,$i))*(element_at($a,$i)-element_at($b,$i))")
-  private[graft] def IvfDot(dim: Int, a: String, b: String): String =
-    unrolled(dim, i => s"element_at($a,$i)*element_at($b,$i)")
   private[graft] def duckDist(dim: Int, a: String, b: String): String =
     unrolled(dim, i => s"($a[$i]-$b[$i])*($a[$i]-$b[$i])")
   private[graft] def duckDot(dim: Int, a: String, b: String): String =
@@ -2784,7 +2782,8 @@ object Pipeline {
     * word key. `localCheckpoint` after edges/nodes and
     * per-iteration ranks truncates the growing lineage — the standard
     * iterative-algorithm hygiene that keeps the 5th iteration's plan the
-    * same size as the 1st. */
+    * same size as the 1st. Each superseded rank pin is released once the
+    * next is pinned, and the edge and node pins once the last is. */
   val PrIters = 5
   val PrScale = 1e12
   def graphPagerank(s: SparkSession, d: String): DataFrame = {
@@ -2795,31 +2794,39 @@ object Pipeline {
     // contribution expression still reads floor((r·wt)/od) with the same
     // association, so every fixed-point value is unchanged.
     val e = pairs.groupBy("src", "dst").agg(sum("pc").as("wt"))
-    val edges = e
-      .join(broadcast(e.groupBy(col("src")).agg(sum("wt").as("od"))), "src")
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("w"))
-      .union(edges.select(col("dst"))).distinct().localCheckpoint()
+    val (edges, edgeIds) = pinnedIds(s) {
+      e.join(broadcast(e.groupBy(col("src")).agg(sum("wt").as("od"))), "src")
+        .localCheckpoint()
+    }
+    val (nodes, nodeIds) = pinnedIds(s) {
+      edges.select(col("src").as("w"))
+        .union(edges.select(col("dst"))).distinct().localCheckpoint()
+    }
     // N is a scalar: count it once instead of re-aggregating + re-
     // broadcasting the one-row nn table inside every iteration's action.
     // lit(n) feeds the identical double expressions.
     val n = nodes.count()
-    var ranks = nodes
-      .select(col("w"), floor(lit(PrScale) / lit(n).cast("long")).as("r"))
-      .localCheckpoint()
+    var (ranks, rankIds) = pinnedIds(s) {
+      nodes.select(col("w"), floor(lit(PrScale) / lit(n).cast("long")).as("r"))
+        .localCheckpoint()
+    }
     for (_ <- 1 to PrIters) {
       val contrib = edges
         .join(broadcast(ranks.withColumnRenamed("w", "src")), "src")
         .select(col("dst").as("w"),
           floor(col("r").cast("double") * col("wt") / col("od")).as("ctr"))
         .groupBy("w").agg(sum("ctr").as("s"))
-      ranks = nodes
-        .join(broadcast(contrib), Seq("w"), "left")
-        .select(col("w"),
-          (floor(lit(0.15) * lit(PrScale) / lit(n).cast("long")) +
-            floor(lit(0.85) * coalesce(col("s"), lit(0L)))).as("r"))
-        .localCheckpoint()
+      val (next, nextIds) = pinnedIds(s) {
+        nodes.join(broadcast(contrib), Seq("w"), "left")
+          .select(col("w"),
+            (floor(lit(0.15) * lit(PrScale) / lit(n).cast("long")) +
+              floor(lit(0.85) * coalesce(col("s"), lit(0L)))).as("r"))
+          .localCheckpoint()
+      }
+      release(s, rankIds)
+      ranks = next; rankIds = nextIds
     }
+    release(s, edgeIds ++ nodeIds) // the result reads the last round only
     ranks.select(col("w"), col("r").as("rank_e12"))
       .orderBy(col("rank_e12").desc, col("w"))
   }
@@ -2908,25 +2915,34 @@ object Pipeline {
     * exactness. Each iteration broadcasts the vocabulary-sized distance
     * table against the (deduplicated, checkpointed) edge list; words
     * unreached after [[BfsIters]] hops are absent, matching the oracle's
-    * fixed CTE chain. */
+    * fixed CTE chain. Pins are released as in [[graphPagerank]]. */
   val BfsIters = 4
   def graphBfsDepth(s: SparkSession, d: String): DataFrame = {
     val words = t(s, d, "documents")
       .select(col("doc_id"), expr(wordsExpr).as("ws"))
-    val edgesCp = Q.bigramEdges(words)
-      .select(col("src"), col("dst")).distinct().localCheckpoint()
+    val (edgesCp, edgeIds) = pinnedIds(s) {
+      Q.bigramEdges(words).select(col("src"), col("dst")).distinct()
+        .localCheckpoint()
+    }
     val uc = words.select(explode(col("ws")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-    var dist = uc.orderBy(col("c").desc, col("w")).limit(1)
-      .select(col("w"), lit(0L).as("depth")).localCheckpoint()
+    var (dist, distIds) = pinnedIds(s) {
+      uc.orderBy(col("c").desc, col("w")).limit(1)
+        .select(col("w"), lit(0L).as("depth")).localCheckpoint()
+    }
     for (_ <- 1 to BfsIters) {
-      val next = edgesCp
+      val reached = edgesCp
         .join(broadcast(dist.withColumnRenamed("w", "src")
           .withColumnRenamed("depth", "pd")), "src")
         .select(col("dst").as("w"), (col("pd") + 1L).as("depth"))
-      dist = dist.union(next).groupBy("w")
-        .agg(min("depth").as("depth")).localCheckpoint()
+      val (next, nextIds) = pinnedIds(s) {
+        dist.union(reached).groupBy("w")
+          .agg(min("depth").as("depth")).localCheckpoint()
+      }
+      release(s, distIds)
+      dist = next; distIds = nextIds
     }
+    release(s, edgeIds) // the result reads the last round only
     dist.orderBy("depth", "w")
   }
   val graphBfsDepthSql: String = {

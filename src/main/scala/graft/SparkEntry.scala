@@ -4,6 +4,10 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Aggregates every implemented operator's query + DuckDB oracle pair. */
 object SparkEntry {
+  // A driver that builds its own session reads this registry first, so
+  // its session gets the engine's codegen cache size too
+  Harness.sizeCodegenCache()
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Tpch.q1(spark, "/root/testdata/sf0.001")

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The session profiles every `main` builds from, pinned from env maps.
-  * Starts no session: the suite shares [[SparkSpec]]'s, and `getOrCreate`
-  * would hand that one back. */
+/** The session profiles every `main` builds from, pinned from env maps,
+  * and the codegen cache every session shares. Starts no session of its
+  * own: `getOrCreate` would hand back [[SparkSpec]]'s. */
 class HarnessSpec extends AnyFunSuite {
   import Harness._
 
@@ -43,5 +44,24 @@ class HarnessSpec extends AnyFunSuite {
       val v = verify(cpus(c))
       assert((v.cores, v.shuffle, v.aqe, v.broadcast) == ((c, c, true, None)))
     }
+  }
+
+  test("the codegen cache size is one constant, read back from the session") {
+    assert(CodegenCacheEntries == 4096)
+    assert(SparkSpec.spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      CodegenCacheEntries.toString)
+  }
+
+  test("a second pass over perfbench's TPC-H queries compiles no class") {
+    // iteration-major, as perfbench runs them: every class of the first
+    // pass must still be cached when the second pass asks for it
+    val qs = Seq("q1", "q2", "q6", "q11", "q15", "q16", "q18", "q21", "q22")
+    def compiles(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      qs.foreach(q => SparkEntry.queries(q)(SparkSpec.spark, SparkSpec.sf).collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = compiles()
+    assert(compiles() == 0, s"the first pass compiled $first")
   }
 }

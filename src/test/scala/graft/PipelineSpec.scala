@@ -1200,6 +1200,31 @@ class GraphTextSpec extends AnyFunSuite {
       }
   }
 
+  test("an iterative graph build leaves only the pin its result reads") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    Seq("graph_pagerank", "graph_bfs_depth").foreach { op =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val df = SparkEntry.queries(op)(spark, sf)
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      val read = df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+      assert(read.size == 1 && left == read.toSet, s"$op: left $left, reads $read")
+      assert(df.count() > 0)
+    }
+  }
+
+  test("a reachability build leaves no CacheManager entry") {
+    // the manager is shared by every session, so the build runs on a copy
+    // of nation no other suite has cached, and counts are compared
+    import org.apache.spark.sql.execution.CacheEntries
+    val dir = java.nio.file.Files.createTempDirectory("graft_reach").toString
+    Q.t(spark, sf, "nation").write.parquet(s"$dir/nation.parquet")
+    val before = CacheEntries(spark)
+    val df = SparkEntry.queries("rec_reachability")(spark, dir)
+    assert(CacheEntries(spark) == before)
+    assert(df.collect().map(_.getLong(0)).toSeq ==
+      SparkEntry.queries("rec_reachability")(spark, sf).collect().map(_.getLong(0)).toSeq)
+  }
+
   test("triangle census equals a local adjacency-set recompute") {
     val texts = spark.read.parquet(s"$sf/documents.parquet")
       .select("text").collect().map(_.getString(0).trim)
