@@ -248,6 +248,25 @@ class QualitySpec extends AnyFunSuite {
       "graph_components" -> 7))
   }
 
+  test("each iterated op starts a fixed number of jobs") {
+    // every round's pin and stop-rule action (and their broadcasts) that
+    // one build runs, in a fresh session with the tables registered;
+    // componentsDistributed solves the 80-node scrambled path of
+    // ComponentsSpec, whose rounds are fixed by its diameter
+    val s = spark.newSession()
+    Q.registerAll(s, sf)
+    def jobs(body: => Unit): Int = jobsDuring(s)(body).size
+    val path = (0 until 80).map(i => (i * 37 % 80 + 1).toLong)
+    val counts = Seq("graph_pagerank", "graph_bfs_depth", "text_bpe_merges",
+        "rec_reachability")
+      .map(n => n -> jobs(SparkEntry.queries(n)(s, sf))).toMap +
+      ("componentsDistributed" -> jobs(Q.componentsDistributed(s,
+        s.createDataFrame(path.zip(path.tail)).toDF("a", "b"))))
+    assert(counts == Map("graph_pagerank" -> 29, "graph_bfs_depth" -> 16,
+      "text_bpe_merges" -> 15, "rec_reachability" -> 14,
+      "componentsDistributed" -> 176))
+  }
+
   test("the content-representative family is invariant to the shuffle width") {
     // the six callers of the shared election return the same rows at
     // widths 1 and 7 as at the suite's width. sf0.001 has no embedding
