@@ -4,11 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Q._
 
-/** Input row for the retractable sliding-window operator (top-level so the
-  * product encoder derives cleanly). */
-case class RetractEv(user_id: Long, event_id: Long,
-    ts: java.sql.Timestamp, value: Double)
-
 /** The "hard items" of SURVEY.md §7.3: GROUPS window frames (rewrite),
   * UDWF-style custom window function, recursive CTEs (fixpoint loop),
   * Chrono→Java `to_char` translation, and the array gap functions. */
@@ -93,7 +88,7 @@ object Advanced {
     * ([[graft.functions.MovingDecimalSumWindow]]), so the plan is a
     * single keyed-shuffle window stage: Spark sorts within partitions
     * spill-safely (no in-memory group materialization, the weakness of the
-    * previous flatMapGroups shape, kept below as a cross-check). Oracle:
+    * previous flatMapGroups shape, kept in KernelsSpec as a cross-check). Oracle:
     * the equivalent `ROWS BETWEEN 3 PRECEDING AND CURRENT ROW` window in
     * DuckDB — exact because the state is decimal. */
   def winMovingRetract(s: SparkSession, d: String): DataFrame = {
@@ -109,37 +104,6 @@ object Advanced {
         |ORDER BY user_id, event_id""".stripMargin)
   }
 
-  /** The pre-window-executor shape (groupByKey + flatMapGroups driving
-    * [[graft.functions.MovingDecimalSum]] directly) — retained as the
-    * cross-check twin for [[winMovingRetract]]; KernelsSpec asserts both
-    * paths and Spark's built-in sliding frame agree row-for-row. */
-  def winMovingRetractFlatMapGroups(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.MovingDecimalSum
-    val frame = 4
-    t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-      .as[RetractEv]
-      .groupByKey(_.user_id)
-      .flatMapGroups { (uid, it) =>
-        // full-precision event-time order: getTime alone is milliseconds
-        // and would tie-break sub-millisecond events differently than the
-        // oracle's ORDER BY ts (microsecond precision)
-        val rows = it.toArray
-          .sortBy(r => (r.ts.getTime, r.ts.getNanos, r.event_id))
-        val inFrame = scala.collection.mutable.Queue.empty[Double]
-        var state = MovingDecimalSum.zero
-        rows.iterator.map { r =>
-          state = MovingDecimalSum.update(state, r.value)
-          inFrame.enqueue(r.value)
-          if (inFrame.size > frame)
-            state = MovingDecimalSum.retract(state, inFrame.dequeue())
-          (uid, r.event_id, MovingDecimalSum.evaluate(state), inFrame.size.toLong)
-        }
-      }
-      .toDF("user_id", "event_id", "mov_sum", "n_frame")
-      .orderBy("user_id", "event_id")
-  }
   val winMovingRetractSql: String =
     """SELECT user_id, event_id,
       |  CAST(sum(CAST(value AS DECIMAL(30,6))) OVER w AS DOUBLE) AS mov_sum,
@@ -150,47 +114,21 @@ object Advanced {
       |ORDER BY user_id, event_id""".stripMargin
 
   /** Recursive CTE (reference RecursiveQuery node, SURVEY.md §2.13):
-    * no Spark support → distributed union-until-fixpoint loop. Each
-    * iteration is a distributed join; only the 1-row convergence check
-    * touches the driver. Computes reachability over a synthetic edge
-    * relation derived from `nation`. */
+    * no Spark support → union-until-fixpoint on the [[Q.iterate]] core,
+    * one distributed join a round, stopping once the row count stops
+    * changing (cap 30 rounds). Computes reachability over a synthetic
+    * edge relation derived from `nation`. */
   def recReachability(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val edges = t(s, d, "nation")
       .select(col("n_nationkey").cast("long").as("src"),
         ((col("n_nationkey") * 7 + 3) % 25).cast("long").as("dst"))
-      .cache()
-    // Iterative-fixpoint pattern with explicit RDD handles: each round's
-    // frontier is persisted as an RDD we hold a reference to, so (a) the
-    // next round's plan reads the materialized set instead of re-deriving
-    // the whole lineage, and (b) the superseded round's blocks are
-    // actually freed — Dataset.localCheckpoint gives no handle to its
-    // internal persisted RDD, so unpersisting anything reachable from the
-    // Dataset is a silent no-op. One job per iteration: the convergence
-    // count doubles as the materialization action.
-    implicit val enc = org.apache.spark.sql.Encoders.scalaLong
-    var reachRdd = s.createDataset(Seq(0L)).rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var cur = reachRdd.count()
-    var lastCount = -1L
-    var iter = 0
-    while (cur != lastCount && iter < 30) {
-      lastCount = cur
-      val reachDF = s.createDataset(reachRdd).toDF("node")
-      val nextRdd = reachDF
-        .join(edges, col("node") === col("src"))
+    iterate(s, "rec_reachability", s.range(0, 1, 1, 1).toDF("node"),
+        Set.empty, fixpoint(30)(rowCount)) { reach =>
+      reach.join(edges, col("node") === col("src"))
         .select(col("dst").as("node"))
-        .union(reachDF)
+        .union(reach)
         .distinct()
-        .as[Long].rdd
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cur = nextRdd.count()
-      reachRdd.unpersist(blocking = false)
-      reachRdd = nextRdd
-      iter += 1
-    }
-    edges.unpersist() // the result reads reachRdd only
-    s.createDataset(reachRdd).toDF("node").orderBy("node")
+    }.orderBy("node")
   }
   val recReachabilitySql: String =
     """WITH RECURSIVE reach(node) AS (

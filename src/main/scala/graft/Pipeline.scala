@@ -968,9 +968,8 @@ object Pipeline {
     // partial phase keeps 5 entries per (q_id, split) map-side, so one
     // exchange ships only k-bounded buffers. The comparator replays the
     // window's (cos DESC, cand_id ASC) order exactly and posexplode's
-    // position replays row_number — [[simAnnIvfWindowedRerank]] (the
-    // window twin) is pinned row-equal in PipelineSpec, and the DuckDB
-    // oracle is untouched.
+    // position replays row_number — PipelineSpec pins it row-equal to
+    // the window twin, and the DuckDB oracle is untouched.
     simAnnIvfRerank(probes, lists)
   }
 
@@ -1077,7 +1076,7 @@ object Pipeline {
   private def simAnnIvfRerank(probes: DataFrame, lists: DataFrame): DataFrame =
     rerankTopK(simAnnIvfPairs(probes, lists), "cos", "cos_sim", roundOut = true)
 
-  private def simAnnIvfPairs(probes: DataFrame, lists: DataFrame): DataFrame =
+  private[graft] def simAnnIvfPairs(probes: DataFrame, lists: DataFrame): DataFrame =
     probes
       .join(lists.select(col("vec_id").as("cand_id"), col("v").as("cv2"),
         col("cid").as("ccid"), col("cn")), col("pcid") === col("ccid") &&
@@ -1088,21 +1087,6 @@ object Pipeline {
       // the norm2 note in simAnnIvfCandidates), oracle hash unchanged
       .withColumn("cos", dot(col("qv"), col("cv2")) /
         (col("qn") * col("cn")))
-
-  /** The pre-round-15 row_number-window re-rank of [[simAnnIvf]]'s
-    * candidate pairs — executable documentation of what
-    * [[graft.functions.TopKByScore]] replays; PipelineSpec pins the two
-    * row-equal over the same probes/lists. */
-  private[graft] def simAnnIvfWindowedRerank(
-      probes: DataFrame, lists: DataFrame): DataFrame = {
-    val rankW = Window.partitionBy(col("q_id")).orderBy(desc("cos"), asc("cand_id"))
-    simAnnIvfPairs(probes, lists)
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank").cast("long").as("rank"), col("cand_id"),
-        round(col("cos"), 6).as("cos_sim"))
-      .orderBy("q_id", "rank")
-  }
 
   /** Map-side argmin cluster assignment over a constant-folded centroid
     * table (expects the vector column named `v`): ties fall to the lowest
@@ -1914,10 +1898,11 @@ object Pipeline {
     * Topology per step: one explode + keyed count (map-side combined)
     * and a 1-row collect of the argmax — the standard distributed-
     * fixpoint shape (cf. dedupGroups); the fuse itself is map-side only.
-    * Lineage is cut with localCheckpoint each round so step k never
-    * replays steps 1..k-1. At 100 TB each step is one linear pass; real
-    * tokenizer training batches many disjoint merges per pass, which is
-    * this same plan with the argmax widened to a top-m. */
+    * Each pass is a round of the [[Q.iterate]] core, whose pin cuts the
+    * lineage so step k never replays steps 1..k-1. At 100 TB each step is
+    * one linear pass; real tokenizer training batches many disjoint
+    * merges per pass, which is this same plan with the argmax widened to
+    * a top-m. */
   def textBpeMerges(s: SparkSession, d: String): DataFrame = {
     val Steps = 5
     // Top-K collected per pass; merges whose sequential-equivalence is
@@ -1927,46 +1912,43 @@ object Pipeline {
     // trainers use, but restricted to the provably-identical subset so
     // the sequential oracle stays hash-exact.
     val TopK = 64
-    var (seqs, seqIds) = pinnedIds(s) {
-      t(s, d, "documents")
-        .select(concat(lit("|"), concat_ws("|", expr(wordsExpr)), lit("|")).as("seq"))
-        .localCheckpoint()
-    }
     val merges = Seq.newBuilder[(Long, String, Long)]
     var done = 0
-    while (done < Steps) {
-      val top = seqs
-        .select(expr("filter(split(seq, '\\\\|'), x -> x <> '')").as("tl"))
-        .filter(size(col("tl")) >= 2)
-        .select(explode(expr(
-          """transform(sequence(1, size(tl) - 1),
-            |  j -> concat(element_at(tl, j), '|', element_at(tl, j + 1)))"""
-            .stripMargin)).as("pair"))
-        .groupBy(col("pair")).agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("pair")).limit(TopK).collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      if (top.isEmpty) done = Steps // corpus fused to single symbols; cannot happen at real sizes
-      val batch = bpeSafePrefix(top.toIndexedSeq, TopK, Steps - done)
-      batch.foreach { case (pair, c) =>
-        done += 1
-        merges += ((done.toLong, pair, c))
-      }
-      if (done < Steps) {
-        // One fused map pass applies the whole batch: the replaces nest
-        // left-to-right in merge order, and disjointness makes that
-        // identical to running them as separate sequential passes.
-        val fusedSeq = batch.foldLeft("seq") { case (inner, (pair, _)) =>
-          val Array(a, b) = pair.split("\\|", 2)
-          s"replace($inner, '|$a|$b|', '|$a~$b|')"
-        }
-        val (next, nextIds) = pinnedIds(s) {
-          seqs.select(expr(fusedSeq).as("seq")).localCheckpoint()
-        }
-        release(s, seqIds)
-        seqs = next; seqIds = nextIds
-      }
-    }
-    release(s, seqIds) // the merge table is built on the driver
+    var batch = IndexedSeq.empty[(String, Long)]
+    // A pass's top-K collect reads every partition of the pass's pin, so
+    // it materializes the pin; the batch it picks decides on the driver
+    // whether another pass runs, and every pass merges at least once.
+    val (_, lastIds) = pinnedIds(s)(iterate(s, "text_bpe_merges",
+        t(s, d, "documents")
+          .select(concat(lit("|"), concat_ws("|", expr(wordsExpr)), lit("|")).as("seq")),
+        Set.empty, Stop[Boolean](Steps, { seqs =>
+          val top = seqs
+            .select(expr("filter(split(seq, '\\\\|'), x -> x <> '')").as("tl"))
+            .filter(size(col("tl")) >= 2)
+            .select(explode(expr(
+              """transform(sequence(1, size(tl) - 1),
+                |  j -> concat(element_at(tl, j), '|', element_at(tl, j + 1)))"""
+                .stripMargin)).as("pair"))
+            .groupBy(col("pair")).agg(count(lit(1)).as("c"))
+            .orderBy(col("c").desc, col("pair")).limit(TopK).collect()
+            .map(r => (r.getString(0), r.getLong(1)))
+          if (top.isEmpty) done = Steps // corpus fused to single symbols; cannot happen at real sizes
+          batch = bpeSafePrefix(top.toIndexedSeq, TopK, Steps - done)
+          batch.foreach { case (pair, c) =>
+            done += 1
+            merges += ((done.toLong, pair, c))
+          }
+          done >= Steps
+        }, (_, _, stop) => stop)) { seqs =>
+      // One fused map pass applies the whole batch: the replaces nest
+      // left-to-right in merge order, and disjointness makes that
+      // identical to running them as separate sequential passes.
+      seqs.select(expr(batch.foldLeft("seq") { case (inner, (pair, _)) =>
+        val Array(a, b) = pair.split("\\|", 2)
+        s"replace($inner, '|$a|$b|', '|$a~$b|')"
+      }).as("seq"))
+    })
+    release(s, lastIds) // the merge table is built on the driver
     import s.implicits._
     merges.result().toDF("step", "pair", "pair_count").orderBy("step")
   }
@@ -2782,8 +2764,7 @@ object Pipeline {
     * word key. `localCheckpoint` after edges/nodes and
     * per-iteration ranks truncates the growing lineage — the standard
     * iterative-algorithm hygiene that keeps the 5th iteration's plan the
-    * same size as the 1st. Each superseded rank pin is released once the
-    * next is pinned, and the edge and node pins once the last is. */
+    * same size as the 1st. Pins are released by the [[Q.iterate]] core. */
   val PrIters = 5
   val PrScale = 1e12
   def graphPagerank(s: SparkSession, d: String): DataFrame = {
@@ -2806,28 +2787,19 @@ object Pipeline {
     // broadcasting the one-row nn table inside every iteration's action.
     // lit(n) feeds the identical double expressions.
     val n = nodes.count()
-    var (ranks, rankIds) = pinnedIds(s) {
-      nodes.select(col("w"), floor(lit(PrScale) / lit(n).cast("long")).as("r"))
-        .localCheckpoint()
-    }
-    for (_ <- 1 to PrIters) {
+    iterate(s, "graph_pagerank",
+        nodes.select(col("w"), floor(lit(PrScale) / lit(n).cast("long")).as("r")),
+        edgeIds ++ nodeIds, rounds(PrIters)) { ranks =>
       val contrib = edges
         .join(broadcast(ranks.withColumnRenamed("w", "src")), "src")
         .select(col("dst").as("w"),
           floor(col("r").cast("double") * col("wt") / col("od")).as("ctr"))
         .groupBy("w").agg(sum("ctr").as("s"))
-      val (next, nextIds) = pinnedIds(s) {
-        nodes.join(broadcast(contrib), Seq("w"), "left")
-          .select(col("w"),
-            (floor(lit(0.15) * lit(PrScale) / lit(n).cast("long")) +
-              floor(lit(0.85) * coalesce(col("s"), lit(0L)))).as("r"))
-          .localCheckpoint()
-      }
-      release(s, rankIds)
-      ranks = next; rankIds = nextIds
-    }
-    release(s, edgeIds ++ nodeIds) // the result reads the last round only
-    ranks.select(col("w"), col("r").as("rank_e12"))
+      nodes.join(broadcast(contrib), Seq("w"), "left")
+        .select(col("w"),
+          (floor(lit(0.15) * lit(PrScale) / lit(n).cast("long")) +
+            floor(lit(0.85) * coalesce(col("s"), lit(0L)))).as("r"))
+    }.select(col("w"), col("r").as("rank_e12"))
       .orderBy(col("rank_e12").desc, col("w"))
   }
   val graphPagerankSql: String = {
@@ -2915,7 +2887,7 @@ object Pipeline {
     * exactness. Each iteration broadcasts the vocabulary-sized distance
     * table against the (deduplicated, checkpointed) edge list; words
     * unreached after [[BfsIters]] hops are absent, matching the oracle's
-    * fixed CTE chain. Pins are released as in [[graphPagerank]]. */
+    * fixed CTE chain. Pins are released by the [[Q.iterate]] core. */
   val BfsIters = 4
   def graphBfsDepth(s: SparkSession, d: String): DataFrame = {
     val words = t(s, d, "documents")
@@ -2926,24 +2898,15 @@ object Pipeline {
     }
     val uc = words.select(explode(col("ws")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-    var (dist, distIds) = pinnedIds(s) {
-      uc.orderBy(col("c").desc, col("w")).limit(1)
-        .select(col("w"), lit(0L).as("depth")).localCheckpoint()
-    }
-    for (_ <- 1 to BfsIters) {
+    iterate(s, "graph_bfs_depth",
+        uc.orderBy(col("c").desc, col("w")).limit(1).select(col("w"), lit(0L).as("depth")),
+        edgeIds, rounds(BfsIters)) { dist =>
       val reached = edgesCp
         .join(broadcast(dist.withColumnRenamed("w", "src")
           .withColumnRenamed("depth", "pd")), "src")
         .select(col("dst").as("w"), (col("pd") + 1L).as("depth"))
-      val (next, nextIds) = pinnedIds(s) {
-        dist.union(reached).groupBy("w")
-          .agg(min("depth").as("depth")).localCheckpoint()
-      }
-      release(s, distIds)
-      dist = next; distIds = nextIds
-    }
-    release(s, edgeIds) // the result reads the last round only
-    dist.orderBy("depth", "w")
+      dist.union(reached).groupBy("w").agg(min("depth").as("depth"))
+    }.orderBy("depth", "w")
   }
   val graphBfsDepthSql: String = {
     def step(k: Int): String =

@@ -423,6 +423,63 @@ object Q {
   private[graft] def release(s: SparkSession, ids: Set[Int]): Unit = ids.foreach(id =>
     s.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
+  /** How an [[iterate]] loop stops. `measure` is each round's one action:
+    * it reads every partition of the round's lazy pin, so it materializes
+    * the pin too. `done` sees the round, the previous measure and this
+    * one; a loop not done after `cap` rounds fails. */
+  private[graft] final case class Stop[T](cap: Int,
+      measure: DataFrame => T, done: (Int, Option[T], T) => Boolean)
+  /** Exactly `n` rounds. */
+  private[graft] def rounds(n: Int): Stop[Long] = Stop[Long](n, rowCount, (k, _, _) => k == n)
+  /** Until `scalar` returns what it returned for the round before. */
+  private[graft] def fixpoint[T](cap: Int)(scalar: DataFrame => T): Stop[T] =
+    Stop[T](cap, scalar, (_, last, cur) => last.contains(cur))
+
+  /** Rows of a pinned frame, counted in one job with no shuffle. */
+  private[graft] def rowCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** The one round loop behind every iterated op (the reference's
+    * recursive-query node). Round 0 pins `init`; round k pins
+    * `step(round k-1)`. Each pin is a lazy `localCheckpoint` that the
+    * stop rule's action materializes, so a round runs no separate pin
+    * job. Once a round is measured, the round before it and any pins its
+    * step made are released; `inputs`, the loop's own pins, are released
+    * when the loop ends, since the result reads only the last round. Past
+    * the cap it throws, naming `op` and the round, with every pin it holds
+    * released. Each round's jobs carry the description `op|round|k`; the
+    * job group is the caller's. */
+  private[graft] def iterate[T](s: SparkSession, op: String, init: DataFrame,
+      inputs: Set[Int], stop: Stop[T])(step: DataFrame => DataFrame): DataFrame = {
+    val sc = s.sparkContext
+    val desc = sc.getLocalProperty("spark.job.description")
+    val pre = sc.getPersistentRDDs.keySet.toSet
+    def round(k: Int, frame: => DataFrame) = {
+      sc.setJobDescription(s"$op|round|$k")
+      val (out, stepIds) = pinnedIds(s)(frame)
+      val (pin, pinIds) = pinnedIds(s)(out.localCheckpoint(eager = false))
+      (pin, pinIds, stepIds, stop.measure(pin))
+    }
+    try {
+      var (cur, curIds, _, v) = round(0, init)
+      var last = Option.empty[T]
+      var k = 0
+      while (!stop.done(k, last, v)) {
+        if (k == stop.cap)
+          throw new IllegalStateException(
+            s"$op did not stop by round $k, its cap of ${stop.cap} rounds")
+        k += 1
+        val (next, nextIds, stepIds, nv) = round(k, step(cur))
+        release(s, curIds ++ stepIds)
+        cur = next; curIds = nextIds; last = Some(v); v = nv
+      }
+      release(s, inputs)
+      cur
+    } catch { case e: Throwable =>
+      release(s, inputs ++ (sc.getPersistentRDDs.keySet.toSet -- pre)); throw e
+    }
+    finally sc.setJobDescription(desc)
+  }
+
   /** Most edges [[components]] collects to solve on the driver: 2²¹.
     * Driver memory at the cap: the typed `(Long, Long)` collect holds 2²¹
     * Tuple2 cells (~32–130 MB depending on boxing; no Row layer), and the
@@ -482,56 +539,37 @@ object Q {
   }
 
   /** Distributed min-label fixpoint, (node, label) rows as
-    * [[componentsDriver]]'s. Each round takes the minimum label over a
-    * node's neighbours, then jumps once (label ← the label of its label;
-    * every label is itself a node id, so the self-join is total), so a
-    * label travels 2^round hops and a path of diameter D converges in
-    * O(log D) rounds. Labels never rise, so Σlabel strictly falls until
-    * the fixpoint: the sum is the convergence check and each round's only
-    * extra job. It is summed as decimal(38,0), since a long sum overflows
-    * at node-id × count scale and a wrapped sum could stall early. Not
-    * converging in 25 rounds fails loudly. Each superseded snapshot is
-    * released once the next one is pinned. */
+    * [[componentsDriver]]'s, on the [[iterate]] core. Each round takes the
+    * minimum label over a node's neighbours, then jumps once (label ← the
+    * label of its label; every label is itself a node id, so the self-join
+    * is total), so a label travels 2^round hops and a path of diameter D
+    * converges in O(log D) rounds. Labels never rise, so Σlabel strictly
+    * falls until the fixpoint: the sum is the stop rule, capped at 25
+    * rounds, and the action that materializes each round's pin. It is
+    * summed as a BigInt, since a long sum overflows at node-id × count
+    * scale and a wrapped sum could stall early. */
   private[graft] def componentsDistributed(
       s: SparkSession, edges: DataFrame): DataFrame = {
     val e = edges.toDF("u", "v")
     val adj = e.union(e.select(col("v"), col("u")))
-    var (lbl, lblIds) = pinnedIds(s) {
-      adj.select(col("u").as("node"), col("u").as("label")).distinct()
-        .localCheckpoint()
+    def labelSum(df: DataFrame): BigInt = {
+      val i = df.schema.fieldIndex("label")
+      df.queryExecution.toRdd.aggregate(BigInt(0))(
+        (acc, r) => if (r.isNullAt(i)) acc else acc + r.getLong(i), _ + _)
     }
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast(DecimalType(38, 0))),
-        lit(0).cast(DecimalType(38, 0)))).head().getDecimal(0)
     def lower(other: String): Column =
       least(col("label"), coalesce(col(other), col("label"))).as("label")
-    var lastSum = labelSum(lbl)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 25) {
+    iterate(s, "components", adj.select(col("u").as("node"), col("u").as("label"))
+        .distinct(), Set.empty, fixpoint(25)(labelSum)) { lbl =>
       val nbr = adj.join(lbl.withColumnRenamed("node", "u"), "u")
         .groupBy(col("v").as("node")).agg(min("label").as("nl"))
       // pinned because the jump reads it twice (self-join)
-      val (prop, propIds) = pinnedIds(s) {
-        lbl.join(nbr, Seq("node"), "left").select(col("node"), lower("nl"))
-          .localCheckpoint()
-      }
-      val (next, nextIds) = pinnedIds(s) {
-        prop.join(prop.select(col("node").as("label"), col("label").as("jl")),
-            Seq("label"), "left")
-          .select(col("node"), lower("jl"))
-          .localCheckpoint()
-      }
-      val total = labelSum(next)
-      release(s, propIds ++ lblIds)
-      lbl = next; lblIds = nextIds
-      converged = total.compareTo(lastSum) == 0
-      lastSum = total
-      iter += 1
+      val prop = lbl.join(nbr, Seq("node"), "left")
+        .select(col("node"), lower("nl")).localCheckpoint()
+      prop.join(prop.select(col("node").as("label"), col("label").as("jl")),
+          Seq("label"), "left")
+        .select(col("node"), lower("jl"))
     }
-    require(converged,
-      s"component label propagation did not converge in $iter rounds")
-    lbl
   }
 
   /** Primitive long→long open-addressing map (linear probing,

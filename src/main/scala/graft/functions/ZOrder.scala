@@ -48,16 +48,4 @@ object ZOrder {
       else ((c - lit(lo)) * lit(top) / lit(hi - lo)).cast("long")
     zvalue(scale(a, aMin, aMax), scale(b, bMin, bMax), bits)
   }
-
-  /** Reference implementation for specs: same interleave on plain longs. */
-  def zvalueRef(a: Long, b: Long, bits: Int): Long = {
-    var z = 0L
-    var i = 0
-    while (i < bits) {
-      z |= ((a >>> i) & 1L) << (2 * i)
-      z |= ((b >>> i) & 1L) << (2 * i + 1)
-      i += 1
-    }
-    z
-  }
 }

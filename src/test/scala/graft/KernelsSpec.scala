@@ -4,6 +4,46 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftFunctions
 
+/** Input row for the flatMapGroups twin of the retractable sliding-window
+  * operator (top-level so the product encoder derives cleanly). */
+case class RetractEv(user_id: Long, event_id: Long,
+    ts: java.sql.Timestamp, value: Double)
+
+object KernelsSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  /** The pre-window-executor shape of [[Advanced.winMovingRetract]]
+    * (groupByKey + flatMapGroups driving
+    * [[graft.functions.MovingDecimalSum]] directly), its cross-check twin. */
+  def winMovingRetractFlatMapGroups(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    import graft.functions.MovingDecimalSum
+    val frame = 4
+    Q.t(s, d, "events")
+      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
+      .as[RetractEv]
+      .groupByKey(_.user_id)
+      .flatMapGroups { (uid, it) =>
+        // full-precision event-time order: getTime alone is milliseconds
+        // and would tie-break sub-millisecond events differently than the
+        // oracle's ORDER BY ts (microsecond precision)
+        val rows = it.toArray
+          .sortBy(r => (r.ts.getTime, r.ts.getNanos, r.event_id))
+        val inFrame = scala.collection.mutable.Queue.empty[Double]
+        var state = MovingDecimalSum.zero
+        rows.iterator.map { r =>
+          state = MovingDecimalSum.update(state, r.value)
+          inFrame.enqueue(r.value)
+          if (inFrame.size > frame)
+            state = MovingDecimalSum.retract(state, inFrame.dequeue())
+          (uid, r.event_id, MovingDecimalSum.evaluate(state), inFrame.size.toLong)
+        }
+      }
+      .toDF("user_id", "event_id", "mov_sum", "n_frame")
+      .orderBy("user_id", "event_id")
+  }
+}
+
 /** Native vector kernels: codegen path vs interpreted vs HOF formulation. */
 class KernelsSpec extends AnyFunSuite {
   import SparkSpec._
@@ -274,7 +314,7 @@ class ScaleUtilitiesSpec extends AnyFunSuite {
     // window-executor path (moving_sum UDWF — the registry default)
     val result = Advanced.winMovingRetract(spark, sf).collect().map(_.toString).toSeq
     // cross-check twin: the flatMapGroups shape driving the accumulator
-    val viaGroups = Advanced.winMovingRetractFlatMapGroups(spark, sf)
+    val viaGroups = KernelsSpec.winMovingRetractFlatMapGroups(spark, sf)
       .collect().map(_.toString).toSeq
     assert(result == viaGroups)
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))

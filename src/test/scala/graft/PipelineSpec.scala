@@ -655,10 +655,26 @@ class TrainingOpsSpec extends AnyFunSuite {
       "WordCounts diverged from the explode + (doc_id, w) groupBy head")
   }
 
+  /** The pre-round-15 row_number-window re-rank of
+    * [[Pipeline.simAnnIvf]]'s candidate pairs: executable documentation
+    * of what [[graft.functions.TopKByScore]] replays. */
+  private def simAnnIvfWindowedRerank(probes: org.apache.spark.sql.DataFrame,
+      lists: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val rankW = Window.partitionBy(col("q_id")).orderBy(desc("cos"), asc("cand_id"))
+    Pipeline.simAnnIvfPairs(probes, lists)
+      .withColumn("rank", row_number().over(rankW))
+      .filter(col("rank") <= 5)
+      .select(col("q_id"), col("rank").cast("long").as("rank"), col("cand_id"),
+        round(col("cos"), 6).as("cos_sim"))
+      .orderBy("q_id", "rank")
+  }
+
   test("TopKByScore re-rank equals the row_number window re-rank") {
     val (probes, lists) = Pipeline.simAnnIvfCandidates(spark, sf)
     val agg = Pipeline.simAnnIvf(spark, sf).collect().toSeq
-    val win = Pipeline.simAnnIvfWindowedRerank(probes, lists).collect().toSeq
+    val win = simAnnIvfWindowedRerank(probes, lists).collect().toSeq
     assert(agg.nonEmpty, "IVF search returned no candidates")
     assert(agg == win,
       "TopKByScore diverged from the (cos DESC, cand_id) window re-rank")
@@ -844,6 +860,18 @@ class ZOrderSpec extends AnyFunSuite {
   import SparkSpec._
   import org.apache.spark.sql.functions._
 
+  /** The interleave of [[graft.functions.ZOrder.zvalue]] on plain longs. */
+  private def zvalueRef(a: Long, b: Long, bits: Int): Long = {
+    var z = 0L
+    var i = 0
+    while (i < bits) {
+      z |= ((a >>> i) & 1L) << (2 * i)
+      z |= ((b >>> i) & 1L) << (2 * i + 1)
+      i += 1
+    }
+    z
+  }
+
   test("zvalue column expression matches the reference interleave") {
     val rows = Q.t(spark, sf, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"),
@@ -852,8 +880,7 @@ class ZOrderSpec extends AnyFunSuite {
       .limit(500).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
-      val expected = graft.functions.ZOrder.zvalueRef(
-        r.getLong(0), r.getLong(1), 16)
+      val expected = zvalueRef(r.getLong(0), r.getLong(1), 16)
       assert(r.getLong(2) == expected, s"(${r.getLong(0)},${r.getLong(1)})")
     }
   }
@@ -953,13 +980,6 @@ class BpeSpec extends AnyFunSuite {
     assert(got == expected.result())
   }
 
-  test("a build releases every sequence snapshot it pins") {
-    // the output is built on the driver, so no snapshot outlives the build
-    val s = spark.newSession()
-    val before = s.sparkContext.getPersistentRDDs.keySet.toSet
-    SparkEntry.queries("text_bpe_merges")(s, sf)
-    assert(s.sparkContext.getPersistentRDDs.keySet.toSet == before)
-  }
 }
 
 /** Graph analytics, collocation, entropy and event-outlier operators:
@@ -1201,28 +1221,33 @@ class GraphTextSpec extends AnyFunSuite {
   }
 
   test("an iterative graph build leaves only the pin its result reads") {
-    import org.apache.spark.sql.execution.LogicalRDD
-    Seq("graph_pagerank", "graph_bfs_depth").foreach { op =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val df = SparkEntry.queries(op)(spark, sf)
-      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-      val read = df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
-      assert(read.size == 1 && left == read.toSet, s"$op: left $left, reads $read")
-      assert(df.count() > 0)
-    }
-  }
-
-  test("a reachability build leaves no CacheManager entry") {
-    // the manager is shared by every session, so the build runs on a copy
-    // of nation no other suite has cached, and counts are compared
-    import org.apache.spark.sql.execution.CacheEntries
+    // every op on the Q.iterate core: the pins left after a build are the
+    // ones its result reads (text_bpe_merges builds its output on the
+    // driver, so none), and no build adds a CacheManager entry. The
+    // manager is shared by every session, so rec_reachability runs on a
+    // copy of nation no other suite has cached, and its rows are compared
+    // with the suite corpus's
+    import org.apache.spark.sql.execution.{CacheEntries, LogicalRDD}
     val dir = java.nio.file.Files.createTempDirectory("graft_reach").toString
     Q.t(spark, sf, "nation").write.parquet(s"$dir/nation.parquet")
-    val before = CacheEntries(spark)
-    val df = SparkEntry.queries("rec_reachability")(spark, dir)
-    assert(CacheEntries(spark) == before)
-    assert(df.collect().map(_.getLong(0)).toSeq ==
-      SparkEntry.queries("rec_reachability")(spark, sf).collect().map(_.getLong(0)).toSeq)
+    val path = (0 until 80).map(i => (i * 37 % 80 + 1).toLong)
+    val builds = Seq("graph_pagerank", "graph_bfs_depth", "text_bpe_merges")
+      .map(op => op -> (() => SparkEntry.queries(op)(spark, sf))) ++ Seq(
+      "rec_reachability" -> (() => SparkEntry.queries("rec_reachability")(spark, dir)),
+      "componentsDistributed" -> (() => Q.componentsDistributed(spark,
+        spark.createDataFrame(path.zip(path.tail)).toDF("a", "b"))))
+    builds.foreach { case (op, build) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val entries = CacheEntries(spark)
+      val df = build()
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      val read = df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+      assert(read.size <= 1 && left == read.toSet, s"$op: left $left, reads $read")
+      assert(CacheEntries(spark) == entries, s"$op added a CacheManager entry")
+      assert(df.count() > 0)
+    }
+    assert(SparkEntry.queries("rec_reachability")(spark, dir).collect().toSeq ==
+      SparkEntry.queries("rec_reachability")(spark, sf).collect().toSeq)
   }
 
   test("triangle census equals a local adjacency-set recompute") {
@@ -1916,6 +1941,48 @@ object ComponentsSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == driver, s"driver=$driver dist=$dist")
     assert(driver == minima)
+  }
+}
+
+/** The round loop behind every iterated op stops loudly at its cap. */
+class IterateSpec extends AnyFunSuite {
+  import SparkSpec._
+
+  test("a loop that never converges throws at its cap and leaves no pin") {
+    // Σx grows every round, so the fixpoint never comes; the input pin and
+    // each step's inner pin must go too, and every round's jobs carry the
+    // op|round|k description
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (input, inputIds) = Q.pinnedIds(spark)(spark.range(4).toDF().localCheckpoint())
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val err = try {
+      intercept[IllegalStateException] {
+        Q.iterate(spark, "never_converges", spark.range(3).toDF("x"), inputIds,
+          Q.fixpoint(4)(df => df.agg(org.apache.spark.sql.functions.sum("x"))
+            .head().getLong(0))) { prev =>
+          prev.join(input.localCheckpoint(), prev("x") === col("id"), "left")
+            .select((prev("x") + 1).as("x"))
+        }
+      }
+    } finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(err.getMessage.contains("never_converges") &&
+      err.getMessage.contains("round 4"), err.getMessage)
+    assert(sc.getPersistentRDDs.keySet.toSet == before)
+    val labels = descs.toArray(Array.empty[String]).toSeq
+    assert(labels.distinct == (0 to 4).map(k => s"never_converges|round|$k"), labels)
+    assert(sc.getLocalProperty("spark.job.description") == null)
   }
 }
 
