@@ -552,11 +552,8 @@ object Q {
       s: SparkSession, edges: DataFrame): DataFrame = {
     val e = edges.toDF("u", "v")
     val adj = e.union(e.select(col("v"), col("u")))
-    def labelSum(df: DataFrame): BigInt = {
-      val i = df.schema.fieldIndex("label")
-      df.queryExecution.toRdd.aggregate(BigInt(0))(
-        (acc, r) => if (r.isNullAt(i)) acc else acc + r.getLong(i), _ + _)
-    }
+    def labelSum(df: DataFrame): BigInt = df.queryExecution.toRdd.aggregate(BigInt(0))(
+      (acc, r) => if (r.isNullAt(1)) acc else acc + r.getLong(1), _ + _) // (node, label)
     def lower(other: String): Column =
       least(col("label"), coalesce(col(other), col("label"))).as("label")
     iterate(s, "components", adj.select(col("u").as("node"), col("u").as("label"))
