@@ -435,8 +435,11 @@ object Q {
   private[graft] def fixpoint[T](cap: Int)(scalar: DataFrame => T): Stop[T] =
     Stop[T](cap, scalar, (_, last, cur) => last.contains(cur))
 
-  /** Rows of a pinned frame, counted in one job with no shuffle. */
-  private[graft] def rowCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
+  /** The RDD behind a lazy `localCheckpoint`: an action on it materializes
+    * the pin in one job, with no query to plan. */
+  private[graft] def pinRdd(pin: DataFrame): org.apache.spark.rdd.RDD[InternalRow] =
+    pin.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+  private[graft] def rowCount(pin: DataFrame): Long = pinRdd(pin).count()
 
   /** The one round loop behind every iterated op (the reference's
     * recursive-query node). Round 0 pins `init`; round k pins
@@ -552,7 +555,7 @@ object Q {
       s: SparkSession, edges: DataFrame): DataFrame = {
     val e = edges.toDF("u", "v")
     val adj = e.union(e.select(col("v"), col("u")))
-    def labelSum(df: DataFrame): BigInt = df.queryExecution.toRdd.aggregate(BigInt(0))(
+    def labelSum(df: DataFrame): BigInt = pinRdd(df).aggregate(BigInt(0))(
       (acc, r) => if (r.isNullAt(1)) acc else acc + r.getLong(1), _ + _) // (node, label)
     def lower(other: String): Column =
       least(col("label"), coalesce(col(other), col("label"))).as("label")

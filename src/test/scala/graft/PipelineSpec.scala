@@ -979,7 +979,6 @@ class BpeSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     assert(got == expected.result())
   }
-
 }
 
 /** Graph analytics, collocation, entropy and event-outlier operators:
